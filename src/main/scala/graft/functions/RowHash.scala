@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType}
 
@@ -41,9 +41,7 @@ object RowHash {
 
   /** Dense 1..n ids in global `sortCols` order with NO single-partition
     * stage: range-repartition on the sort key (equal keys land in one
-    * partition; RangePartitioner's reservoir sampling is seeded
-    * per-partition, so bounds are deterministic for a deterministic parent
-    * plan), sort within partitions, then [[denseIdByPartitionOffset]].
+    * partition), sort within partitions, then [[denseIdByPartitionOffset]].
     * Output is identical to `row_number().over(Window.orderBy(sortCols))` —
     * partition order equals global sort order — but every stage stays
     * distributed AND inside whole-stage codegen (the former RDD
@@ -51,49 +49,52 @@ object RowHash {
     * so it holds at any scale. The one requirement carried by callers:
     * `sortCols` must be a total order (append a unique tiebreak such as
     * `row_hash`).
+    *
+    * Eager: the exchange and one count job run before this returns; the
+    * returned frame reads the frozen rows.
     */
   def orderedDenseId(df: DataFrame, sortCols: Seq[Column],
                      idCol: String): DataFrame =
     denseIdByPartitionOffset(
       df.repartitionByRange(sortCols: _*).sortWithinPartitions(sortCols: _*)
-        // Eager checkpoint — load-bearing, NOT an optimization.
-        // RangePartitioner seeds its reservoir sampling from the RDD id,
-        // which is minted fresh every time an action compiles the plan: two
-        // separate actions over this frame can land boundary rows in
-        // DIFFERENT partitions. The mint below runs two actions (counts,
-        // then tag), so the partitioning must be frozen once. RDD
-        // zipWithIndex froze it by sharing one RDD across its jobs;
-        // the columnar equivalent is a local checkpoint, which pins the
-        // rows AS InternalRow blocks (no external-Row round trip) and
-        // keeps everything downstream inside whole-stage codegen.
-        .localCheckpoint(true),
+        // Local checkpoint — load-bearing, NOT an optimization. The mint
+        // reads its input twice (a count job, then the tagged pass), so the
+        // row->partition assignment must be the same both times, and a plan
+        // compiled twice does not guarantee that: RangePartitioner seeds
+        // its reservoir sampling from the RDD id, minted afresh per
+        // compilation, so two actions over the bare frame can land boundary
+        // rows in DIFFERENT partitions. `localCheckpoint` compiles the plan
+        // ONCE — it runs the exchange (sampling and map stage) right here —
+        // and returns a frame over that single RDD; both passes read it.
+        // Lazy (`false`) is enough: the count job is the first to compute
+        // the RDD and fills the checkpoint as it goes, so the tagged pass
+        // reads the stored InternalRow blocks (no external-Row round trip,
+        // everything downstream inside whole-stage codegen) and no job is
+        // spent filling it beforehand.
+        .localCheckpoint(false),
       idCol, 0L)
 
   /** Mint dense `offset+1..offset+n` ids in partition-major row order
     * WITHOUT leaving columnar execution: the same two passes RDD
-    * `zipWithIndex` runs (a count job, then the tagged pass), but expressed
-    * as codegen'd expressions — `spark_partition_id()` keys a per-partition
-    * count aggregate (one row per partition to the driver: metadata-scale),
-    * the cumulative offsets come back as a broadcast map literal, and the
-    * intra-partition row index is `monotonically_increasing_id()`'s low 33
-    * bits (its documented layout: partitionId << 33 | rowIndexInPartition,
-    * assigned in row-production order — here the post-sort order).
+    * `zipWithIndex` runs — one count job over the physical rows (one
+    * `(partition, rows)` pair per partition to the driver: metadata-scale),
+    * then the tagged pass, expressed as codegen'd expressions: the
+    * cumulative offsets come back as a map literal keyed on
+    * `spark_partition_id()`, and the intra-partition row index is
+    * `monotonically_increasing_id()`'s low 33 bits (its documented layout:
+    * partitionId << 33 | rowIndexInPartition, assigned in row-production
+    * order — here the post-sort order).
     *
     * PRECONDITION (why this is private): both passes run as separate
     * actions, so the input's row->partition assignment must be identical
-    * across plan compilations — the caller must pass a materialized
-    * (checkpointed/cached) frame, as [[orderedDenseId]] arranges. For
-    * arbitrary un-materialized parents use `Sinks.withDenseId`, whose RDD
+    * across them — the caller must pass a frame over one frozen RDD
+    * (checkpointed/cached), as [[orderedDenseId]] arranges. For arbitrary
+    * un-materialized parents use `Sinks.withDenseId`, whose RDD
     * zipWithIndex freezes ONE physical plan for both of its jobs.
     */
   private def denseIdByPartitionOffset(df: DataFrame, idCol: String,
                                        offset0: Long): DataFrame = {
-    val tagged = df
-      .withColumn("__pid", spark_partition_id())
-      .withColumn("__rix",
-        monotonically_increasing_id().bitwiseAND(lit((1L << 33) - 1)))
-    val counts = tagged.groupBy("__pid").agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
+    val counts = partitionRowCounts(df)
     // The low-33-bit mask wraps silently if a single partition holds >= 2^33
     // rows; fail loudly instead of minting duplicate ids. (At 2^33 rows a
     // partition is already far past any sane partition sizing.)
@@ -103,16 +104,28 @@ object RowHash {
           "repartition the input before minting ids")
     }
     var acc = offset0
-    val offsets = counts.map { case (pid, n) => val o = acc; acc += n; pid -> o }
+    val offsets = counts.filter(_._2 > 0)
+      .map { case (pid, n) => val o = acc; acc += n; pid -> o }
     val offsetCol =
       if (offsets.isEmpty) lit(offset0) // empty input: no rows to look up
       else element_at(
         map_from_arrays(array(offsets.map(p => lit(p._1)).toIndexedSeq: _*),
           array(offsets.map(p => lit(p._2)).toIndexedSeq: _*)),
-        col("__pid"))
-    tagged.withColumn(idCol, (col("__rix") + offsetCol + lit(1L)).cast(LongType))
-      .drop("__pid", "__rix")
+        spark_partition_id())
+    df.withColumn(idCol, (monotonically_increasing_id()
+        .bitwiseAND(lit((1L << 33) - 1)) + offsetCol + lit(1L)).cast(LongType))
   }
+
+  /** Rows per physical partition of `df`, in partition order, from ONE job
+    * over its executed RDD — the partition index is the one
+    * `spark_partition_id()` reports over the same frame.
+    */
+  private def partitionRowCounts(df: DataFrame): Array[(Int, Long)] =
+    df.queryExecution.toRdd.mapPartitionsWithIndex { (pid, rows) =>
+      var n = 0L
+      while (rows.hasNext) { rows.next(); n += 1 }
+      Iterator.single(pid -> n)
+    }.collect().sortBy(_._1)
 
   /** SHA-256 hex fingerprint over the given columns, sorted by name. */
   def rowHash(colNames: Seq[String]): Column =

@@ -65,7 +65,8 @@ object Guardrails {
   def boundedIds(ids: Column, maxBucketRows: Long, what: String,
                  fix: String): Column =
     if (maxBucketRows <= 0) ids
-    else when(assert_true(size(ids) <= lit(maxBucketRows.toInt),
+    // compared as longs: a bound above Int.MaxValue must not wrap negative
+    else when(assert_true(size(ids).cast("long") <= lit(maxBucketRows),
         concat(lit(s"$GuardMarker$what: largest candidate bucket holds "),
           size(ids).cast("string"),
           lit(s" rows (> $maxBucketRows) — the banded pair explode " +

@@ -19,28 +19,44 @@ object Runner {
   final case class TableResult(table: String, rows: Long, error: Option[String],
                                mode: String = "")
 
-  /** Build the loaded (pre-sink) frame for one table spec: filters +
-    * optional semi-join + audit columns (hash over ALL pre-audit columns —
+  /** Build the loaded (pre-sink) frame for one table spec: [[loadBare]]
+    * plus [[withAudit]]'s audit columns (hash over ALL pre-audit columns —
     * the one hash basis shared with Merge.classify). Ids are dense 1..n in
     * natural-key order when the spec has one, in partition order otherwise —
-    * both minted via zipWithIndex with no single-partition window stage
-    * (RowHash.withAuditColumns' scale-safe default).
+    * both minted with no single-partition window stage
+    * (RowHash.withAuditColumns' scale-safe default). Eager: minting the ids
+    * runs Spark jobs before this returns.
     */
-  def loadTable(spark: SparkSession, sfDir: String, spec: TableSpec): DataFrame = {
+  def loadTable(spark: SparkSession, sfDir: String, spec: TableSpec): DataFrame =
+    withAudit(loadBare(spark, sfDir, spec), spec)
+
+  /** The source rows one table spec selects: scan → filters → optional
+    * semi-join, with no audit columns. Lazy — builds a plan, runs no job.
+    * This is the frame the hash-diff merge consumes: Merge hashes its
+    * source itself and mints ids only for inserts.
+    */
+  def loadBare(spark: SparkSession, sfDir: String, spec: TableSpec): DataFrame = {
     var df = TableSpec.read(spark, sfDir, spec.name)
     if (spec.filters.nonEmpty) df = df.filter(Filters.all(spec.filters))
     spec.semiJoin.foreach { case (buildTable, buildKey, probeKey) =>
       val build = TableSpec.read(spark, sfDir, buildTable)
       df = Filters.semiJoinIn(df, probeKey, build, buildKey)
     }
-    if (spec.keys.nonEmpty) RowHash.withAuditColumns(df, spec.keys)
+    df
+  }
+
+  /** The audit step of [[loadTable]]: `id`, `row_hash`, `created_at`,
+    * `updated_at` over a [[loadBare]] frame — key-ordered ids when the
+    * spec has a key, partition-ordered otherwise.
+    */
+  def withAudit(bare: DataFrame, spec: TableSpec): DataFrame =
+    if (spec.keys.nonEmpty) RowHash.withAuditColumns(bare, spec.keys)
     else {
       import org.apache.spark.sql.functions.current_timestamp
-      Sinks.withDenseId(RowHash.withRowHash(df))
+      Sinks.withDenseId(RowHash.withRowHash(bare))
         .withColumn("created_at", current_timestamp())
         .withColumn("updated_at", current_timestamp())
     }
-  }
 
   /** Run every spec; `sink` persists each frame (e.g. parquet overwrite, or
     * a Merge.apply against existing state for Incremental mode).
@@ -83,7 +99,10 @@ object Runner {
     specs.map { spec =>
       val path = s"$basePath/${spec.name}"
       try {
-        val src = loadTable(spark, sfDir, spec)
+        // Bare rows: the merge branch hashes its source itself and mints
+        // ids only for inserts, so the audit columns (and the jobs that
+        // mint them) are paid only on the branches that write them.
+        val src = loadBare(spark, sfDir, spec)
         val bootstrap = spec.refreshMode == RefreshMode.FullRefresh ||
           !Sinks.exists(spark, path)
         // The reference falls back to full refresh for tables whose
@@ -96,17 +115,16 @@ object Runner {
           Merge.duplicateKeyAudit(src, spec.keys).limit(1).count() > 0
         val (rows, mode) =
           if (bootstrap || keyUnreliable)
-            (Sinks.fullRefresh(src, path),
+            (Sinks.fullRefresh(withAudit(src, spec), path),
               if (keyUnreliable) "full_refresh_fallback_dup_keys" else "full_refresh")
           else {
-            val bare = src.drop("id", "row_hash", "created_at", "updated_at")
-            val tgt = Merge.evolveTarget(bare, spark.read.parquet(path))
+            val tgt = Merge.evolveTarget(src, Sinks.readParquet(spark, path))
             // Merge.apply emits data-then-audit column order; keep the
             // stored layout stable across runs (evolved columns append).
             // A column the SOURCE dropped is absent from the merge output —
             // the stored schema follows the source (the source of truth),
             // intersecting here instead of failing the table forever.
-            val merged = Merge.apply(bare, tgt, spec.keys)
+            val merged = Merge.apply(src, tgt, spec.keys)
             val keep = tgt.columns.filter(merged.columns.contains)
             (Sinks.overwriteViaStaging(
               merged.select(keep.toIndexedSeq.map(org.apache.spark.sql.functions.col): _*), path),

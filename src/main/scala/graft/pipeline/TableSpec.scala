@@ -27,7 +27,8 @@ final case class TableSpec(
 }
 
 object TableSpec {
-  /** Read one fixture table. Sessions set
+  /** Read one fixture table, its schema from the file's footer on the
+    * driver (`Sinks.readParquet`: no schema-inference job). Sessions set
     * `spark.sql.legacy.parquet.nanosAsLong=true` (Spark has no native
     * nanosecond timestamp), so TIMESTAMP(NANOS) columns arrive as Long —
     * convert them back to micros-precision timestamps here. Integer `div`
@@ -36,7 +37,7 @@ object TableSpec {
   def read(spark: SparkSession, sfDir: String, table: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
     import org.apache.spark.sql.types.LongType
-    val df = spark.read.parquet(s"$sfDir/$table.parquet")
+    val df = Sinks.readParquet(spark, s"$sfDir/$table.parquet")
     if (table == "events" && df.schema("ts").dataType == LongType)
       // cast to NTZ: every other fixture timestamp reads as TIMESTAMP_NTZ
       // (parquet without tz), and the DuckDB oracle emits naive timestamps —

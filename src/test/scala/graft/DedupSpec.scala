@@ -67,6 +67,23 @@ class DedupSpec extends SparkSpec {
       maxHamming = 3, maxBucketRows = 0).count() == 10)
   }
 
+  test("bucket guard compares in long space: a bound above Int.MaxValue passes") {
+    val big = Int.MaxValue.toLong + 1L
+    assert(Dedup.minHashCandidates(docs, "doc_id", "text", shingleN = 2,
+      bands = 8, rowsPerBand = 2, minJaccard = 0.3, maxBucketRows = big).count() > 0)
+    assert(Dedup.minHashCandidatesPortable(docs, "doc_id", "text",
+      maxBucketRows = big).count() > 0)
+  }
+
+  test("minHash candidates never pair a repeated id with itself") {
+    val text = "the quick brown fox jumps over the lazy dog"
+    val dup = Seq(1L -> text, 1L -> text, 2L -> text).toDF("doc_id", "text")
+    val native = Dedup.minHashCandidates(dup, "doc_id", "text", shingleN = 2,
+        bands = 8, rowsPerBand = 2, minJaccard = 0.3)
+      .select("id_a", "id_b").as[(Long, Long)].collect().toSeq
+    assert(native == Seq((1L, 2L)), native)
+  }
+
   test("dedupCorpus removes near-dups, keeps min-id survivor and uniques") {
     val out = Dedup.dedupCorpus(docs, "doc_id", "text",
         shingleN = 2, bands = 8, rowsPerBand = 2, minJaccard = 0.8)
