@@ -3,6 +3,7 @@ package graft
 import graft.functions.{Normalize, RowHash}
 import graft.operators._
 import graft.pipeline.{Runner, Sinks, TableSpec}
+import graft.pipeline.CorpusPipeline.spread
 import graft.streaming.Streams
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -27,43 +28,6 @@ object SparkEntry {
 
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
     TableSpec.read(spark, dir, name)
-
-  /** Spread a small fixture frame across the cluster before heavy per-row
-    * work (JDK codec encode/decode, multi-tokenizer round trips): the
-    * fixture parquet is a single file with one row group, so a map-only
-    * chain on top of its scan runs in ONE task while every other core
-    * idles (optimization guide §2.5 input skew / §2.6 idle capacity — the
-    * r17 plan audits show both MapPartitions nodes sitting directly on the
-    * single-split scan). The exchange moves only the narrow PRE-synthesis
-    * columns (ids, text) — never the synthesized payload bytes (guide §8:
-    * decide/shuffle on light rows, build heavy bytes after) — and the
-    * partition count derives from the session's defaultParallelism, not a
-    * local constant, so the driver's lower-core sweeps keep their shape.
-    *
-    * GATED on the input's actual split count (r18, VERDICT r17 §wrong-1):
-    * `repartition(n)` always executes a full exchange, and on the text
-    * rows the exchanged columns include the corpus text — at production
-    * scale, where inputs arrive already split into >= parallelism file
-    * splits, that is a gratuitous full-corpus shuffle prepended to the
-    * pipeline. The gate reads the LEAF SCANS' split count from the
-    * physical plan — driver-side file-split metadata, no job, no
-    * execution of any upstream exchange (the crawl-recipe site spreads an
-    * aggregate's output, whose runtime partitioning is unknowable without
-    * running it; its leaf split count is the right proxy — a pre-split
-    * source parallelizes the whole DAG at its shuffles already). Unknown
-    * leaf types conservatively count as already-split (skip the exchange:
-    * cached/in-memory frames are not the single-split parquet fixture
-    * this helper exists for).
-    */
-  private[graft] def spread(df: DataFrame): DataFrame = {
-    val par = df.sparkSession.sparkContext.defaultParallelism
-    val leafSplits = df.queryExecution.sparkPlan.collectLeaves().map {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-        f.inputRDD.getNumPartitions.toLong
-      case _ => Long.MaxValue / 4096 // unknown: assume already split
-    }.sum
-    if (leafSplits < par) df.repartition(par) else df
-  }
 
   /** Test/diagnostic hook: the constructed FineWeb crawl-page fixture
     * over the documents table (see [[fineWebPages]]).
@@ -3767,22 +3731,17 @@ object SparkEntry {
     // the oracle reconstructs each cleaned text character-for-character.
     // Exact substring dedup (r11, VERDICT r10 §next-6 — Lee et al. 2022
     // ExactSubstr): duplicate >= 4-token substrings at ARBITRARY
-    // alignment removed from every occurrence; seeded on md5 window
-    // fingerprints, extended by per-doc interval merge. The oracle
+    // alignment removed from every occurrence; seeded on rolling window
+    // fingerprints, extended by a per-doc coverage merge. The oracle
     // replays the full chain — stride-1 windows, duplicate counting,
-    // interval merge via the same running-max rule, rebuild — on the
-    // window STRINGS (the engine's md5 is an internal 128-bit key for
+    // interval merge via the running-max rule, rebuild — on the window
+    // STRINGS (the engine's 122-bit fingerprint is an internal key for
     // the same relation, the dedupSpansAcross precedent).
     "q_dedup_substring" -> ((s, d) =>
       Dedup.dedupSubstrings(t(s, d, "documents"), "doc_id", "text",
         minTokens = 4).orderBy("doc_id")),
-    // Rolling-fingerprint production twin (r11): identical semantics,
-    // Rabin-Karp O(1)-per-position window fingerprints (the md5 form
-    // re-hashes the corpus ~k times at the published k = 50). Rows-only
-    // (xxhash-derived); pinned by output equality with the oracled md5
-    // form — spec-pinned on fixtures AND on random corpora, and both
-    // queries run the same parameters here so the driver rows must agree
-    // row-for-row.
+    // dedupSubstringsFast forwards to dedupSubstrings, so this row shares
+    // its oracle.
     "q_dedup_substring_fast" -> ((s, d) =>
       Dedup.dedupSubstringsFast(t(s, d, "documents"), "doc_id", "text",
         minTokens = 4).orderBy("doc_id")),

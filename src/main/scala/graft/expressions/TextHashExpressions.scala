@@ -55,6 +55,48 @@ object MinHashOps {
     }
     UnsafeArrayData.fromPrimitiveArray(mins)
   }
+
+  /** The md5 family of [[graft.operators.Dedup.minHashCandidatesPortable]]
+    * in one pass per row: over `lowered`'s non-empty `\s+` tokens, each
+    * `shingleN`-token shingle (tokens joined by " ") yields ceil(k/4)
+    * digests `md5(shingle + ":" + c)`, and hash `j` is the unsigned
+    * big-endian 32-bit word `j % 4` of digest `j / 4` — bit-identical to
+    * the oracle's `CAST('0x'||substr(md5(..),1+8*(j%4),8) AS BIGINT)`.
+    * Returns the k minima, or null with fewer than `shingleN` tokens.
+    */
+  def portable(lowered: UTF8String, shingleN: Int, k: Int): ArrayData = {
+    val toks = lowered.toString.split("\\s+").filter(_.nonEmpty)
+      .map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    if (toks.length < shingleN) return null
+    val md = java.security.MessageDigest.getInstance("MD5")
+    val suffix = Array.tabulate((k + 3) / 4)(c =>
+      s":$c".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val mins = Array.fill(k)(Long.MaxValue)
+    var s = 0
+    while (s <= toks.length - shingleN) {
+      var c = 0
+      while (c < suffix.length) {
+        var p = 0
+        while (p < shingleN) {
+          if (p > 0) md.update(' '.toByte)
+          md.update(toks(s + p))
+          p += 1
+        }
+        md.update(suffix(c))
+        val d = md.digest()
+        var w = 0
+        while (w < 4 && 4 * c + w < k) {
+          val h = ((d(4 * w) & 0xffL) << 24) | ((d(4 * w + 1) & 0xffL) << 16) |
+            ((d(4 * w + 2) & 0xffL) << 8) | (d(4 * w + 3) & 0xffL)
+          if (h < mins(4 * c + w)) mins(4 * c + w) = h
+          w += 1
+        }
+        c += 1
+      }
+      s += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(mins)
+  }
 }
 
 /** Native signed feature-hashing vector (the hashing trick, Weinberger et
@@ -753,8 +795,8 @@ object BpeOps {
   }
 }
 
-/** Rolling polynomial window fingerprints for the exact-substring dedup
-  * production path ([[graft.operators.Dedup.dedupSubstringsFast]]): ALL
+/** Rolling polynomial window fingerprints and the text rebuild for
+  * exact-substring dedup ([[graft.operators.Dedup.dedupSubstrings]]): ALL
   * stride-1 `k`-token window fingerprints of a document in O(tokens)
   * total — the md5-of-concatenated-window form hashes O(k) bytes PER
   * POSITION, which at the published k = 50 means hashing the corpus
@@ -853,6 +895,47 @@ object SubstrRollingOps {
       i += 1
     }
     new GenericArrayData(out)
+  }
+
+  /** ExactSubstr's rebuild: drop every token covered by a marked window
+    * `[s, s + k)` (`starts` in any order, null = none) and join the rest
+    * by " ", as `(text_clean, n_tokens_kept, n_tokens_removed)`. Same
+    * tokenization as [[windowFingerprintPairs]]; a NULL text is empty.
+    * Coverage is a difference array over positions, O(tokens + starts).
+    */
+  def rebuild(text: UTF8String, starts: ArrayData,
+              k: Int): org.apache.spark.sql.catalyst.InternalRow = {
+    val toks =
+      if (text == null) Array.empty[String]
+      else text.toString.split("\\s+").filter(_.nonEmpty)
+    val n = toks.length
+    val depth = new Array[Int](n + 1)
+    if (starts != null) {
+      var i = 0
+      while (i < starts.numElements()) {
+        val s = starts.getLong(i)
+        if (s >= 0 && s < n) {
+          depth(s.toInt) += 1
+          depth(math.min(s + k, n.toLong).toInt) -= 1
+        }
+        i += 1
+      }
+    }
+    val sb = new java.lang.StringBuilder
+    var kept = 0L
+    var cover = 0
+    var p = 0
+    while (p < n) {
+      cover += depth(p)
+      if (cover == 0) {
+        if (kept > 0) sb.append(' ')
+        sb.append(toks(p))
+        kept += 1
+      }
+      p += 1
+    }
+    org.apache.spark.sql.catalyst.InternalRow(
+      UTF8String.fromString(sb.toString), kept, n - kept)
   }
 }
 
@@ -1874,6 +1957,39 @@ object TextHashExpressions {
         Literal(seed1), Literal(base2), Literal(seed2)),
       inputTypes = Seq(StringType, IntegerType, LongType, LongType,
         LongType, LongType),
+      propagateNull = true,
+      returnNullable = true))
+
+  /** ExactSubstr rebuild as `struct<text_clean, n_tokens_kept,
+    * n_tokens_removed>` (see [[SubstrRollingOps.rebuild]]); NULL text or
+    * starts pass through as empty.
+    */
+  def substrRebuild(text: Column, starts: Column, k: Int): Column =
+    GraftBridge.column(StaticInvoke(
+      SubstrRollingOps.getClass,
+      StructType(Seq(
+        StructField("text_clean", StringType, nullable = false),
+        StructField("n_tokens_kept", LongType, nullable = false),
+        StructField("n_tokens_removed", LongType, nullable = false))),
+      "rebuild",
+      Seq(GraftBridge.expression(text), GraftBridge.expression(starts),
+        Literal(k)),
+      inputTypes = Seq(StringType, ArrayType(LongType), IntegerType),
+      propagateNull = false,
+      returnNullable = false))
+
+  /** The portable md5 MinHash signature (see [[MinHashOps.portable]]);
+    * lowercasing stays Spark's own `lower`, so tokens match the
+    * relational form on every input.
+    */
+  def minHashSignaturePortable(text: Column, shingleN: Int, k: Int): Column =
+    GraftBridge.column(StaticInvoke(
+      MinHashOps.getClass,
+      ArrayType(LongType, containsNull = false),
+      "portable",
+      Seq(GraftBridge.expression(org.apache.spark.sql.functions.lower(text)),
+        Literal(shingleN), Literal(k)),
+      inputTypes = Seq(StringType, IntegerType, IntegerType),
       propagateNull = true,
       returnNullable = true))
 

@@ -135,16 +135,18 @@ object Dedup {
     *
     * signature of k = bands*rowsPerBand hashes; each band's hash-column group
     * is hashed to a bucket; docs sharing any (band, bucket) become
-    * candidates; exact Jaccard over shingle sets verifies. The band explode
-    * costs `bands`× rows (small constant); the only shuffles are the
-    * signature aggregation, the band-bucket self-join and the final
-    * distinct — the classic scale path for 100 TB near-dedup.
+    * candidates; exact Jaccard over shingle sets verifies. Scale shape:
+    * the signature is a map-side native pass; the band explode costs
+    * `bands`× rows (small constant); the only shuffles are the
+    * bucket-keyed id aggregate, the pair distinct and the verify joins
+    * over the (tiny) candidate set — the classic scale path for 100 TB
+    * near-dedup.
     *
     * NOT a lazy plan builder: calling this runs the signature + banding
-    * jobs eagerly and leaves the candidate-pair frame persisted (id pairs
+    * job eagerly and leaves the candidate-pair frame persisted (id pairs
     * only — tiny) until LRU eviction or `spark.catalog.clearCache()`.
-    * The eager materialization is what lets the (unreused-exchange)
-    * self-join and the verify stage share one signature computation.
+    * The eager materialization is what lets the verify stage's three
+    * references to the pairs share one signature pass.
     */
   def minHashCandidates(df: DataFrame, idCol: String, textCol: String,
                         shingleN: Int = 3, bands: Int = 8, rowsPerBand: Int = 4,
@@ -153,17 +155,11 @@ object Dedup {
     val k = bands * rowsPerBand
     // Signatures come from the native one-pass-per-row expression (no token
     // explode, no window, no aggregate — the signature stage shuffles
-    // nothing). The band-bucket self-join references them on BOTH sides and
-    // Spark does not reuse the exchange across them (verified in the plan) —
-    // persist the signatures (k longs per doc, ~256 B/doc: tiny next to the
-    // corpus; the same trade Spark ML's MinHashLSH makes) so the signature
-    // map runs once, and free them as soon as the candidate pairs are
-    // materialized below.
+    // nothing). Banding below is their only reader, so they are not pinned.
     val sigs = df.select(col(idCol).as("id"),
         graft.expressions.TextHashExpressions
           .minHashSignature(col(textCol), shingleN, k).as("sig"))
       .filter(col("sig").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // Band-bucket join carries ONLY (band, bucket, id) — shingle arrays would
     // multiply the shuffle width by bands×; they re-attach to the (tiny)
     // candidate pair set below instead.
@@ -184,7 +180,7 @@ object Dedup {
     // pair array in memory.
     // pairs is referenced three times below (two re-attach joins + candIds);
     // persisting it (id pairs only — tiny even at 100 TB) stops Spark from
-    // re-running the signature aggregation once per reference. The cache
+    // re-running the signature pass once per reference. The cache
     // entry lives until LRU eviction or session end — long-lived sessions
     // calling this repeatedly should spark.catalog.clearCache() between runs.
     val buckets = banded.groupBy(col("band"), col("bucket"))
@@ -202,9 +198,8 @@ object Dedup {
       .filter(col("id_a") < col("id_b")) // drop duplicate-id self-pairs
       .distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // materialize now: pins the pair set, releases the signatures
+    // materialize now: pins the pair set, trips the bucket guard eagerly
     Guardrails.rethrowBucketGuard(pairs.count())
-    sigs.unpersist()
     // Verify stage: semi-join the corpus down to candidate ids BEFORE
     // computing shingle sets — the expensive map runs over the (tiny)
     // candidate set, not the corpus, and never twice over everything.
@@ -228,60 +223,34 @@ object Dedup {
   /** Oracle-portable MinHash+LSH candidate pairs: the [[minHashCandidates]]
     * pipeline shape with the hash family swapped from engine-private
     * xxhash64 to an md5-prefix family both Spark and DuckDB compute
-    * bit-identically (`CAST('0x'||substr(md5(shingle||':'||j),1,8) AS
-    * BIGINT)` — the proven q_cur_hash_split trick). The ENTIRE candidate
-    * generation — shingling, k-way min-hash, banding, bucket self-join — is
+    * bit-identically (`CAST('0x'||substr(md5(shingle||':'||c),1+8*(j%4),8)
+    * AS BIGINT)` — the proven q_cur_hash_split trick). The ENTIRE candidate
+    * generation — shingling, k-way min-hash, banding, bucket grouping — is
     * therefore replayable by the SQL oracle, giving the LSH pipeline a
-    * hash-green driver row instead of a rows-only count. Production paths
-    * keep the native xxhash signatures (one pass per row, no shingle-string
-    * materialization); this variant pays string md5s and a shingle explode,
-    * but its SHUFFLE shape is identical: one signature aggregation keyed on
-    * id, a banded id-only self-join, a distinct. Docs shorter than
+    * hash-green driver row instead of a rows-only count. Docs shorter than
     * `shingleN` tokens have no shingles and never pair (house convention).
+    *
+    * Scale shape: the signature is ONE native call per row
+    * ([[graft.expressions.MinHashOps.portable]]: tokenize, shingle, ceil(k/4)
+    * md5s per shingle, k minima) — no token explode, no window, no shingle
+    * strings in any shuffle. Rows sharing an id fold to one signature by
+    * an element-wise `min` (k longs per id, combined map-side), then one
+    * bucket-keyed id aggregate and a distinct emit the pairs.
     */
   def minHashCandidatesPortable(df: DataFrame, idCol: String, textCol: String,
                                 shingleN: Int = 3, bands: Int = 4,
                                 rowsPerBand: Int = 2,
                                 maxBucketRows: Long = Guardrails.DefaultMaxBucketRows): DataFrame = {
     val k = bands * rowsPerBand
-    // Shingle strings via the codegen'd posexplode + window-lead shape
-    // ([[shingleHashRows]]'s trick with strings): the array-HOF form
-    // (`explode(array_distinct(transform(sequence…)))`) runs interpreted
-    // and dominated this query's profile. Duplicate shingles survive here —
-    // `min` is duplicate-insensitive, so the signatures equal the oracle's
-    // DISTINCT-shingle form. The window and the signature aggregate share
-    // the hash-partitioning on `id`: one shuffle total before banding.
-    val toks = df.select(col(idCol).as("id"),
-      posexplode(filter(split(lower(col(textCol)), "\\s+"), w => w =!= "")))
-    val w = Window.partitionBy("id").orderBy("pos")
-    val parts = col("col") +: (1 until shingleN).map(j => lead(col("col"), j).over(w))
-    val complete = (1 until shingleN).map(j => parts(j).isNotNull)
-      .reduceOption(_ && _).getOrElse(lit(true))
-    val shingled = toks
-      .select(col("id"), concat_ws(" ", parts: _*).as("shingle"), complete.as("__ok"))
-      .filter(col("__ok"))
-    // Hash family j = 8-hex-char chunk (j mod 4) of md5(shingle:":"(j div 4))
-    // — one md5 yields FOUR independent 32-bit values, so k functions cost
-    // ceil(k/4) md5 evaluations per shingle, not k (md5 dominates this
-    // query's cost; the chunks of one digest are independent by design of
-    // the hash). The digests are projected once per row; the k min
-    // aggregates read substrings of them.
-    val nDigests = (k + 3) / 4
-    val digested = shingled.select(Seq(col("id")) ++ (0 until nDigests).map(c =>
-      md5(concat(col("shingle"), lit(s":$c"))).as(s"__d$c")): _*)
-    def mh(j: Int): Column =
-      min(conv(substring(col(s"__d${j / 4}"), 1 + 8 * (j % 4), 8), 16, 10)
-        .cast("long"))
-    // Persist + materialize the signatures before the self-join — the same
-    // trade [[minHashCandidates]] makes: the band join references them on
-    // BOTH sides and Spark does not reuse the exchange, so without the pin
-    // the whole tokenize/shingle/md5 upstream runs twice more inside the
-    // join (profiled ~3× the query's cost). k longs per doc — tiny. The
-    // entry lives until LRU eviction or `spark.catalog.clearCache()`.
-    val sigs = digested.groupBy("id")
-      .agg(mh(0).as("h0"), (1 until k).map(j => mh(j).as(s"h$j")): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    sigs.count() // fill the cache once, not racily from both join sides
+    // One signature per id: `min` per position over the rows sharing the
+    // id is the signature of their shingle-set union. Banding is the only
+    // reader, so nothing is pinned.
+    val sig = graft.expressions.TextHashExpressions
+      .minHashSignaturePortable(col(textCol), shingleN, k)
+    val sigs = df.select(col(idCol).as("id"), sig.as("sig"))
+      .filter(col("sig").isNotNull)
+      .groupBy("id").agg(min(element_at(col("sig"), 1)).as("h0"),
+        (1 until k).map(j => min(element_at(col("sig"), j + 1)).as(s"h$j")): _*)
     val banded = sigs.select(col("id"), explode(array((0 until bands).map { b =>
         struct(lit(b).as("band"),
           concat_ws(",", (0 until rowsPerBand)
@@ -307,13 +276,10 @@ object Dedup {
       // distinct and the slice after `pos` yields only larger ones
       .distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // The minHashCandidates pin swap (code-review r12 — the portable twin
-    // was missing it, so the sigs entry outlived every call): materialize
-    // the tiny pair set, release the signature cache, return the pinned
-    // pairs for the CALLER to unpersist once consumed (the dedupCorpus
-    // convention).
+    // Materialize the tiny pair set (tripping the bucket guard eagerly)
+    // and return it pinned for the CALLER to unpersist once consumed (the
+    // dedupCorpus convention).
     Guardrails.rethrowBucketGuard(pairs.count())
-    sigs.unpersist()
     pairs
   }
 
@@ -595,7 +561,8 @@ object Dedup {
     * result in one action. Candidate-pair sets ARE usually this small
     * relative to the corpus (they're bounded by the near-duplicate count),
     * but the distributed loop remains the path the moment the bound is
-    * exceeded — pass `localEdgeLimit = 0` to force it.
+    * exceeded. `localEdgeLimit <= 0` means "always distributed": no
+    * driver probe runs, whatever the edge count.
     */
   def duplicateGroups(pairs: DataFrame, maxIter: Int = 20,
                       localEdgeLimit: Long = 1L << 20): DataFrame =
@@ -1297,62 +1264,35 @@ object Dedup {
     * covered by any duplicated window, original order and case),
     * `n_tokens_kept`, `n_tokens_removed`. Every document survives.
     *
-    * Scale shape: the seed pass is a map-side posexplode of (doc, start,
-    * md5(window)) — one row per corpus token (stride 1), the same stream
-    * width as the MinHash shingle pass; md5's 128 bits keep the
-    * fingerprint birthday-safe at 100 TB window counts where a 64-bit
-    * hash would collide. Then ONE fingerprint-keyed count (fixed 16-byte
-    * key), a semi-join back, a DOC-keyed lag/cummax window merging
-    * overlapping seeds into intervals (per-doc ordering, no corpus
-    * window), an interval explode bounded by ACTUAL coverage (never
-    * ×minTokens), and one per-doc rebuild aggregate. All shuffles are
-    * fingerprint- or doc-keyed.
+    * Scale shape: window fingerprints come from ONE native call per
+    * document ([[graft.expressions.SubstrRollingOps]]: Rabin–Karp rolling
+    * hashes, O(1) per position after one Horner pass, so the seed stage
+    * costs the same at k = 4 and the published k = 50), keyed on TWO
+    * independent 61-bit fingerprints (122 bits — birthday-safe at
+    * web-scale window counts). The window stream is computed once and
+    * shuffled once, fingerprint-keyed, where a windowed count marks the
+    * duplicated starts; the marked starts group per document, join back
+    * to the document row, and one native call per document merges their
+    * coverage and rebuilds the text. Every shuffle is fingerprint- or
+    * doc-keyed; nothing is all-pairs.
     */
   def dedupSubstrings(df: DataFrame, idCol: String, textCol: String,
                       minTokens: Int): DataFrame = {
     require(minTokens >= 2,
       s"dedupSubstrings: minTokens must be >= 2, got $minTokens")
-    val k = minTokens
-    val toks = substrToks(df, idCol, textCol)
-    val wins = substrWindows(toks, idCol, k)
-    val dupFp = wins.groupBy("__fp").agg(count(lit(1)).as("__c"))
-      .filter(col("__c") >= 2).select("__fp")
-    val dupStarts = wins.join(dupFp, Seq("__fp"), "left_semi")
-    rebuildUncovered(toks, idCol, k, dupStarts)
+    val dupStarts = rollingWindows(df, idCol, textCol, minTokens)
+      .withColumn("__c",
+        count(lit(1)).over(Window.partitionBy("__f1", "__f2")))
+      .filter(col("__c") >= 2)
+    rebuildUncovered(df, idCol, textCol, minTokens, dupStarts)
   }
 
-  /** PRODUCTION twin of [[dedupSubstrings]] for large `minTokens`: same
-    * semantics, window fingerprints computed by Rabin–Karp ROLLING
-    * polynomial hashing ([[graft.expressions.SubstrRollingOps]]) — the
-    * md5 form hashes O(minTokens) bytes per position, which at the
-    * published k = 50 re-hashes the corpus ~50×; the rolling form is
-    * O(1) per position after one Horner pass per document, so the seed
-    * stage costs the same at k = 4 and k = 50. Keys on TWO independent
-    * 61-bit fingerprints (122 bits — the md5 family's birthday-safety
-    * argument at web-scale window counts). xxhash-based, so rows-only
-    * at the driver; output equality with the oracled md5 form is
-    * spec-pinned (DedupSpec, including the random-corpus property).
+  /** [[dedupSubstrings]]; the name serves the `q_dedup_substring_fast`
+    * driver row.
     */
   def dedupSubstringsFast(df: DataFrame, idCol: String, textCol: String,
-                          minTokens: Int): DataFrame = {
-    require(minTokens >= 2,
-      s"dedupSubstringsFast: minTokens must be >= 2, got $minTokens")
-    val k = minTokens
-    // one native call: one tokenize, two seed hashes per token, two
-    // Horner rolls — the whole point is not re-hashing the corpus
-    // (code-review r11: the two-single-family-calls form tokenized and
-    // XXH64'd every document twice)
-    val pairsCol = graft.expressions.TextHashExpressions
-      .rollingWindowFingerprintPairs(col(textCol), k,
-        base1 = 1000003L, seed1 = 42L, base2 = 998244353L, seed2 = 7L)
-    val wins = df.select(col(idCol), posexplode(pairsCol))
-      .select(col(idCol), col("pos").cast("long").as("__s"),
-        col("col").as("__fp"))
-    val dupFp = wins.groupBy("__fp").agg(count(lit(1)).as("__c"))
-      .filter(col("__c") >= 2).select("__fp")
-    val dupStarts = wins.join(dupFp, Seq("__fp"), "left_semi")
-    rebuildUncovered(substrToks(df, idCol, textCol), idCol, k, dupStarts)
-  }
+                          minTokens: Int): DataFrame =
+    dedupSubstrings(df, idCol, textCol, minTokens)
 
   /** Cross-corpus EXACT SUBSTRING decontamination — [[dedupSubstrings]]'
     * machinery pointed at an eval set (Lee et al. 2022 §6.2 apply their
@@ -1364,26 +1304,23 @@ object Dedup {
     * survive (with the leaked substrings excised); eval text is never
     * modified.
     *
-    * Scale shape: corpus windows are the same stride-1 fingerprint
-    * stream; the eval side is benchmark-sized by definition, so its
-    * distinct window set broadcasts and the probe is a broadcast
+    * Scale shape: corpus windows are the same native stride-1
+    * fingerprint stream; the eval side is benchmark-sized by definition,
+    * so its distinct window set broadcasts and the probe is a broadcast
     * LEFT SEMI against the corpus stream — no corpus shuffle at all
-    * before the doc-keyed rebuild (the [[contaminationHits]] shape).
+    * before the doc-keyed native rebuild (the [[contaminationHits]]
+    * shape).
     */
   def dedupSubstringsAgainst(corpus: DataFrame, evalDocs: DataFrame,
                              idCol: String, textCol: String,
                              evalTextCol: String, minTokens: Int): DataFrame = {
     require(minTokens >= 2,
       s"dedupSubstringsAgainst: minTokens must be >= 2, got $minTokens")
-    val k = minTokens
-    val toks = substrToks(corpus, idCol, textCol)
-    val wins = substrWindows(toks, idCol, k)
-    val evalFp = substrWindows(
-        substrToks(evalDocs.select(col(evalTextCol)), null, evalTextCol),
-        null, k)
-      .select("__fp").distinct()
-    val hitStarts = wins.join(broadcast(evalFp), Seq("__fp"), "left_semi")
-    rebuildUncovered(toks, idCol, k, hitStarts)
+    val evalFp = rollingWindows(evalDocs, null, evalTextCol, minTokens)
+      .select("__f1", "__f2").distinct()
+    val hitStarts = rollingWindows(corpus, idCol, textCol, minTokens)
+      .join(broadcast(evalFp), Seq("__f1", "__f2"), "left_semi")
+    rebuildUncovered(corpus, idCol, textCol, minTokens, hitStarts)
   }
 
   /** Persist the corpus's substring-window fingerprint index: one
@@ -1401,7 +1338,7 @@ object Dedup {
     require(minTokens >= 2,
       s"substringWriteIndex: minTokens must be >= 2, got $minTokens")
     val spark = df.sparkSession
-    substrWindows(substrToks(df, idCol, textCol), idCol, minTokens)
+    substrWindows(df, idCol, textCol, minTokens)
       .groupBy("__fp").agg(count(lit(1)).as("cnt"))
       .select(col("__fp").as("fp"), col("cnt"))
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
@@ -1437,7 +1374,7 @@ object Dedup {
                            batchTag: Option[String] = None): Unit = {
     val k = substringIndexMeta(newDocs.sparkSession, path,
       "substringAppendIndex")
-    val rows = substrWindows(substrToks(newDocs, idCol, textCol), idCol, k)
+    val rows = substrWindows(newDocs, idCol, textCol, k)
       .groupBy("__fp").agg(count(lit(1)).as("cnt"))
       .select(col("__fp").as("fp"), col("cnt"))
     batchTag match {
@@ -1489,78 +1426,61 @@ object Dedup {
     val idx = spark.read.parquet(s"$path/fps")
     require(idx.columns.contains("fp"),
       s"substringProbeIndex: $path is not a substring index (want fp column)")
-    val toks = substrToks(newDocs, idCol, textCol)
-    val hitStarts = substrWindows(toks, idCol, k)
+    val hitStarts = substrWindows(newDocs, idCol, textCol, k)
       .join(idx.select(col("fp").as("__fp")), Seq("__fp"), "left_semi")
-    rebuildUncovered(toks, idCol, k, hitStarts)
+    rebuildUncovered(newDocs, idCol, textCol, k, hitStarts)
   }
 
-  /** Whitespace tokens + count for the substring operators; `idCol` null
-    * means "no id needed" (the eval side, which only contributes
-    * fingerprints).
+  /** Stride-1 `k`-token window fingerprints for the persisted substring
+    * index family: one (id?, __s, __fp = md5(window text)) row per start
+    * position 0 .. n-k; `idCol` null means "no id needed". md5 is the
+    * index's on-disk `fp` format. NULL text has no windows.
     */
-  private def substrToks(df: DataFrame, idCol: String,
-                         textCol: String): DataFrame = {
-    val base = if (idCol == null) df.select(col(textCol))
-               else df.select(col(idCol), col(textCol))
-    // NULL text behaves as empty (code-review r11: split(NULL) → NULL →
-    // size = -1 under legacy sizeOfNull made n_tokens_removed NEGATIVE
-    // for null-text docs): zero tokens, zero removed, empty rebuild.
-    base.withColumn("__tk",
-        filter(split(coalesce(col(textCol), lit("")), "\\s+"), t => t =!= ""))
-      .withColumn("__n", size(col("__tk"))).drop(textCol)
-  }
-
-  /** Stride-1 `k`-token window fingerprints: one (id?, __s, __fp) row per
-    * start position 0 .. n-k.
-    */
-  private def substrWindows(toks: DataFrame, idCol: String,
+  private def substrWindows(df: DataFrame, idCol: String, textCol: String,
                             k: Int): DataFrame = {
     val idCols = if (idCol == null) Seq.empty else Seq(col(idCol))
-    toks.filter(col("__n") >= k)
+    df.select(idCols :+ filter(split(col(textCol), "\\s+"), t => t =!= "")
+        .as("__tk"): _*)
+      .filter(size(col("__tk")) >= k)
       .select(idCols :+ posexplode(transform(
-        sequence(lit(0), col("__n") - k),
+        sequence(lit(0), size(col("__tk")) - k),
         i => md5(concat_ws(" ", slice(col("__tk"), i + 1, lit(k)))))): _*)
-      .withColumnRenamed("pos", "__sraw")
-      .withColumnRenamed("col", "__fp")
-      .withColumn("__s", col("__sraw").cast("long")).drop("__sraw")
+      .select(idCols ++ Seq(col("pos").cast("long").as("__s"),
+        col("col").as("__fp")): _*)
   }
 
-  /** Shared tail of the substring operators: merge the marked seed starts
-    * into maximal coverage intervals per doc (lag/cummax — a seed at
-    * start s covers [s, s+k); a new interval begins only when the start
-    * clears every previous seed's end), explode exactly the covered
-    * positions, rebuild every document from its uncovered tokens.
+  /** The same stride-1 windows keyed by the two rolling fingerprints
+    * (`__f1`, `__f2`) of [[graft.expressions.SubstrRollingOps]] — one
+    * native call per document; only in-call comparisons use them.
     */
-  private def rebuildUncovered(toks: DataFrame, idCol: String, k: Int,
+  private def rollingWindows(df: DataFrame, idCol: String, textCol: String,
+                             k: Int): DataFrame = {
+    val idCols = if (idCol == null) Seq.empty else Seq(col(idCol))
+    df.select(idCols :+ posexplode(graft.expressions.TextHashExpressions
+        .rollingWindowFingerprintPairs(col(textCol), k,
+          base1 = 1000003L, seed1 = 42L, base2 = 998244353L, seed2 = 7L)): _*)
+      .select(idCols ++ Seq(col("pos").cast("long").as("__s"),
+        col("col.f1").as("__f1"), col("col.f2").as("__f2")): _*)
+  }
+
+  /** Shared tail of the substring operators: group the marked seed starts
+    * per document, join them back to the document row, and rebuild each
+    * document from the tokens no marked window `[s, s+k)` covers — one
+    * native call per document ([[graft.expressions.SubstrRollingOps.rebuild]]),
+    * no token explode, no interval window. A document with no marked
+    * start keeps its text; NULL text rebuilds as empty.
+    */
+  private def rebuildUncovered(docs: DataFrame, idCol: String,
+                               textCol: String, k: Int,
                                markedStarts: DataFrame): DataFrame = {
-    val w = Window.partitionBy(idCol).orderBy("__s")
-    val prevEnd = max(col("__s") + k)
-      .over(w.rowsBetween(Window.unboundedPreceding, -1))
-    val intervals = markedStarts
-      .withColumn("__ng",
-        when(col("__s") > coalesce(prevEnd, lit(-1L)), 1).otherwise(0))
-      .withColumn("__g",
-        sum(col("__ng")).over(w.rowsBetween(Window.unboundedPreceding, 0)))
-      .groupBy(col(idCol), col("__g"))
-      .agg(min("__s").as("__lo"), (max("__s") + k - 1).as("__hi"))
-    val covered = intervals.select(col(idCol),
-      explode(sequence(col("__lo"), col("__hi"))).as("pos"))
-    val tokRows = toks.select(col(idCol), posexplode(col("__tk")))
-    val rebuilt = tokRows.join(covered, Seq(idCol, "pos"), "left_anti")
-      .groupBy(col(idCol))
-      .agg(
-        concat_ws(" ", transform(
-          array_sort(collect_list(struct(col("pos"), col("col")))),
-          s => s.getField("col"))).as("text_clean"),
-        count(lit(1)).as("n_tokens_kept"))
-    toks.select(col(idCol), col("__n"))
-      .join(rebuilt, Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("text_clean"), lit("")).as("text_clean"),
-        coalesce(col("n_tokens_kept"), lit(0L)).as("n_tokens_kept"),
-        (col("__n") - coalesce(col("n_tokens_kept"), lit(0L)))
-          .as("n_tokens_removed"))
+    val starts = markedStarts.groupBy(col(idCol))
+      .agg(collect_list(col("__s")).as("__starts"))
+    docs.select(col(idCol), col(textCol))
+      .join(starts, Seq(idCol), "left")
+      .select(col(idCol), graft.expressions.TextHashExpressions
+        .substrRebuild(col(textCol), col("__starts"), k).as("__r"))
+      .select(col(idCol), col("__r.text_clean"), col("__r.n_tokens_kept"),
+        col("__r.n_tokens_removed"))
   }
 
   /** Train/eval DECONTAMINATION — per-corpus-doc count of distinct word
@@ -1957,9 +1877,10 @@ object Dedup {
     * text at all. Identical token sequences estimate exactly 1.0 (equal
     * signatures), which [[SparkEntry]]'s probe gate pins.
     *
-    * Scale shape: the (band, bucket, id) shuffle carries ids and longs
-    * only; signatures re-attach to the (tiny) candidate pair set, never
-    * ride the band explode.
+    * Scale shape: the corpus side groups its (band, bucket) ids in one
+    * shuffle of ids and ints, the bucket guard checked in that pass; the
+    * new side joins those buckets; signatures re-attach to the (tiny)
+    * candidate pair set, never ride the band explode.
     */
   def minHashProbeIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                         newDocs: DataFrame, idCol: String, textCol: String,
@@ -1996,21 +1917,28 @@ object Dedup {
           .minHashSignature(col(textCol), shingleN, k).as("sig"))
       .filter(col("sig").isNotNull)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val corpusBanded = banded(idx, "corpus_id")
-    Guardrails.requireBoundedBuckets(corpusBanded, Seq("band", "bucket"),
-      maxBucketRows, s"minHashProbeIndex(bands=$bands, rowsPerBand=$rowsPerBand)",
+    // Corpus buckets group their ids with the bucket guard fused into the
+    // same pass (the r18 minHashCandidates shape): no separate guardrail
+    // job over the whole index, and the checkpoint below still surfaces
+    // an oversized bucket as the classic IllegalArgumentException.
+    val corpusBuckets = banded(idx, "corpus_id").groupBy("band", "bucket")
+      .agg(collect_list(col("corpus_id")).as("__ids"))
+    val guarded = Guardrails.boundedIds(col("__ids"), maxBucketRows,
+      s"minHashProbeIndex(bands=$bands, rowsPerBand=$rowsPerBand)",
       "raise rowsPerBand or exact-dedup the corpus before indexing")
     val pairs = banded(newSigs, "new_id")
-      .join(corpusBanded, Seq("band", "bucket"))
-      .select("new_id", "corpus_id").distinct()
+      .join(corpusBuckets.select(col("band"), col("bucket"),
+        guarded.as("__ids")), Seq("band", "bucket"))
+      .select(col("new_id"), explode(col("__ids")).as("corpus_id"))
+      .distinct()
     val est = size(filter(zip_with(col("sig_n"), col("sig_c"),
       (a, b) => a === b), x => x)).cast("double") / k
-    val res = pairs
+    val res = Guardrails.rethrowBucketGuard(pairs
       .join(newSigs.select(col("id").as("new_id"), col("sig").as("sig_n")), Seq("new_id"))
       .join(idx.select(col("id").as("corpus_id"), col("sig").as("sig_c")), Seq("corpus_id"))
       .select(col("new_id"), col("corpus_id"), est.as("jaccard_est"))
       .filter(col("jaccard_est") >= minEstJaccard)
-      .localCheckpoint(true)
+      .localCheckpoint(true))
     newSigs.unpersist()
     res
   }

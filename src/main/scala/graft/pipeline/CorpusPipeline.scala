@@ -363,10 +363,42 @@ object CorpusPipeline {
 
   /** Disk-backed pin of a step input consumed by several subtrees (the
     * TokenizeBpe materialize-before-multi-pass trade; see the
-    * DedupSpansWithin note in [[run]]).
+    * DedupSpansWithin note in [[run]]), [[spread]] first: every reader
+    * of the pin — the dedups' per-document native kernels — then runs on
+    * all cores instead of the one task a single-split input gives.
     */
   private def pin(d: DataFrame): DataFrame =
-    d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    spread(d).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+
+  /** Spread a frame across the cluster before heavy per-row work: a
+    * single-file, one-row-group parquet input runs a map-only chain on
+    * top of its scan in ONE task while every other core idles, and AQE
+    * coalesces KB-to-MB shuffles back to one partition. The exchange
+    * moves the rows as they are (ids, text — spread before synthesizing
+    * heavy payloads, not after); the partition count is the session's
+    * defaultParallelism.
+    *
+    * GATED on the input's actual split count: `repartition(n)` always
+    * executes a full exchange, and at production scale, where inputs
+    * arrive already split into >= parallelism file splits, that would be
+    * a gratuitous full-corpus shuffle. The gate reads the LEAF SCANS'
+    * split count from the physical plan — driver-side file-split
+    * metadata, no job, no execution of any upstream exchange (a frame
+    * over an aggregate has a runtime partitioning unknowable without
+    * running it; its leaf split count is the right proxy — a pre-split
+    * source parallelizes the whole DAG at its shuffles already). Unknown
+    * leaf types, cached frames included, count as already split (no
+    * exchange), so spreading an already-pinned prefix is free.
+    */
+  private[graft] def spread(df: DataFrame): DataFrame = {
+    val par = df.sparkSession.sparkContext.defaultParallelism
+    val leafSplits = df.queryExecution.sparkPlan.collectLeaves().map {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+        f.inputRDD.getNumPartitions.toLong
+      case _ => Long.MaxValue / 4096 // unknown: assume already split
+    }.sum
+    if (leafSplits < par) df.repartition(par) else df
+  }
 
   /** Rewrite `textCol` with `f(id, text)`'s `text_clean` output while
     * preserving every other column (inner join back on id — both span

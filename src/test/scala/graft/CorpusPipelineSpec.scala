@@ -165,7 +165,8 @@ class CorpusPipelineSpec extends SparkSpec {
     assert(smoothed.split("\n").length == 3)
   }
 
-  test("fineWebRecipe: url dup, language, near-copy and echoed spans all handled") {
+  /** Five pages exercising every fineWebRecipe gate. */
+  private def fineWebDocs = {
     def salad(doc: Int, a: Int, b: Int) =
       (a to b).map(i => s"w${doc}x$i").mkString(" ")
     // every constructed line embeds its doc id so unrelated docs share
@@ -177,7 +178,7 @@ class CorpusPipelineSpec extends SparkSpec {
         " and it ended there.",
       s"note $id of those $id words here it is $id done fine.")
       .mkString("\n")
-    val docs = Seq(
+    Seq(
       (1L, "https://ex.com/a", enPage(1)),
       // same canonical URL as doc 1 (case + trailing slash decoration)
       (2L, "HTTPS://EX.com/a/", enPage(2)),
@@ -198,6 +199,10 @@ class CorpusPipelineSpec extends SparkSpec {
         salad(5, 1, 10) + " and 5 said so again here done fine.")
         .mkString("\n"))
     ).toDF("doc_id", "url", "text")
+  }
+
+  test("fineWebRecipe: url dup, language, near-copy and echoed spans all handled") {
+    val docs = fineWebDocs
     val out = CorpusPipeline.run(docs, "doc_id", "text",
         CorpusPipeline.fineWebRecipe())
       .select("doc_id", "text").as[(Long, String)].collect().toMap
@@ -207,6 +212,20 @@ class CorpusPipelineSpec extends SparkSpec {
     assert(out(5L).contains("w5x31"), out(5L)) // untouched middle survives
     // doc 1 (no duplicate anywhere after the copy died) keeps its salad
     assert(out(1L).contains("w1x1 ") && out(1L).contains("w1x30"), out(1L))
+  }
+
+  test("fineWebRecipe on a single-split input starts fewer Spark jobs") {
+    // The near-dup step used to pin and count its signatures before
+    // banding: this run started 27 jobs with that extra pass.
+    val dir = java.nio.file.Files.createTempDirectory("graft-fw-jobs")
+      .toString + "/docs"
+    fineWebDocs.coalesce(1).write.parquet(dir)
+    val (out, jobs) = JobLog(spark)(
+      CorpusPipeline.run(spark.read.parquet(dir), "doc_id", "text",
+        CorpusPipeline.fineWebRecipe()).select("doc_id").as[Long].collect())
+    assert(out.toSet == Set(1L, 5L))
+    assert(jobs.size < 27, s"${jobs.size} jobs:\n${jobs.mkString("\n--\n")}")
+    spark.catalog.clearCache()
   }
 
   test("PerplexityFloorKN step drops the high-perplexity tail under KN") {

@@ -84,6 +84,79 @@ class DedupSpec extends SparkSpec {
     assert(native == Seq((1L, 2L)), native)
   }
 
+  test("minHashCandidatesPortable never pairs a repeated id with itself") {
+    val text = "the quick brown fox jumps over the lazy dog"
+    val dup = Seq(1L -> text, 1L -> text, 2L -> text).toDF("doc_id", "text")
+    val got = Dedup.minHashCandidatesPortable(dup, "doc_id", "text")
+      .select("id_a", "id_b").as[(Long, Long)].collect().toSeq
+    assert(got == Seq((1L, 2L)), got)
+  }
+
+  test("portable MinHash kernel equals the relational md5 formula on random texts") {
+    // the formula the oracle replays: lower, split on \s+, drop empties,
+    // shingles joined by " ", hash j = 8-hex chunk j%4 of md5(shingle:j/4)
+    val r = new scala.util.Random(11)
+    val atoms = Seq("a", "B", "quick", "ß", "É", "İ", "ΣΑΣ", "日本", "x\u00a0y",
+      "\ud83d\ude00", "a.b", "Q")
+    val seps = Seq(" ", "  ", "\t", "\n", " \r\n ", "\u000b")
+    def text(n: Int) = (0 until n).map(_ => atoms(r.nextInt(atoms.size)))
+      .map(_ + seps(r.nextInt(seps.size))).mkString(seps(r.nextInt(seps.size)), "", "")
+    val texts = Seq(null, "", "  \t ", "one", "one two") ++
+      (0 until 200).map(_ => text(r.nextInt(12)))
+    val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      .toDF("doc_id", "text")
+    val toks = filter(split(lower(col("text")), "\\s+"), w => w =!= "")
+    for ((n, k) <- Seq((3, 8), (1, 6), (4, 5))) {
+      val shingles = df.select(col("doc_id"), toks.as("t"))
+        .filter(size(col("t")) >= n)
+        .select(col("doc_id"), explode(transform(
+          sequence(lit(0), size(col("t")) - n),
+          i => concat_ws(" ", slice(col("t"), i + 1, lit(n))))).as("sh"))
+      val want = shingles.groupBy("doc_id").agg(array((0 until k).map(j =>
+          min(conv(substring(md5(concat(col("sh"), lit(s":${j / 4}"))),
+            1 + 8 * (j % 4), 8), 16, 10).cast("long"))): _*).as("sig"))
+        .as[(Long, Seq[Long])].collect().toMap
+      val got = df.select(col("doc_id"), graft.expressions.TextHashExpressions
+          .minHashSignaturePortable(col("text"), n, k).as("sig"))
+        .filter(col("sig").isNotNull)
+        .as[(Long, Seq[Long])].collect().toMap
+      assert(want.size > 100, s"shingleN=$n: too few signed texts")
+      assert(got == want, s"shingleN=$n k=$k")
+    }
+  }
+
+  test("duplicateGroups: localEdgeLimit <= 0 always runs distributed") {
+    val pairs = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("id_a", "id_b")
+    val local = Dedup.duplicateGroups(pairs).as[(Long, Long)].collect().toSet
+    for (lim <- Seq(0L, -1L, Long.MinValue)) {
+      val (labels, rounds) = Dedup.duplicateGroupsWithRounds(pairs,
+        localEdgeLimit = lim)
+      assert(rounds > 0, s"localEdgeLimit=$lim took the driver path")
+      assert(labels.as[(Long, Long)].collect().toSet == local)
+    }
+  }
+
+  test("minHashProbeIndex: bucket guard rides the probe's own pass") {
+    val path = java.nio.file.Files.createTempDirectory("mhguard").toString +
+      "/idx"
+    val text = "same exact text in every document"
+    Dedup.minHashWriteIndex((0L until 5L).map(i => (i, text))
+      .toDF("doc_id", "text"), "doc_id", "text", path)
+    val batch = Seq(10L -> text).toDF("doc_id", "text")
+    val e = intercept[IllegalArgumentException] {
+      Dedup.minHashProbeIndex(spark, path, batch, "doc_id", "text",
+        maxBucketRows = 3)
+    }
+    assert(e.getMessage.contains("largest candidate bucket holds 5 rows") &&
+      e.getMessage.contains("rowsPerBand"), e.getMessage)
+    val (hits, jobs) = JobLog(spark)(Dedup.minHashProbeIndex(spark, path,
+      batch, "doc_id", "text", maxBucketRows = 5).count())
+    assert(hits == 5)
+    assert(!jobs.exists(_.contains("requireBoundedBuckets")))
+    // with the separate eager guard aggregate this probe started 15 jobs
+    assert(jobs.size < 15, s"${jobs.size} jobs")
+  }
+
   test("dedupCorpus removes near-dups, keeps min-id survivor and uniques") {
     val out = Dedup.dedupCorpus(docs, "doc_id", "text",
         shingleN = 2, bands = 8, rowsPerBand = 2, minJaccard = 0.8)

@@ -136,12 +136,12 @@ class SparkEntrySpec extends SparkSpec {
     def hasRoundRobin(df: org.apache.spark.sql.DataFrame): Boolean =
       df.queryExecution.executedPlan.toString.contains("roundrobin") ||
         df.queryExecution.executedPlan.toString.contains("RoundRobin")
-    val one = SparkEntry.spread(
+    val one = graft.pipeline.CorpusPipeline.spread(
       spark.read.parquet(s"$dir/one").select(col("doc_id")))
     assert(hasRoundRobin(one),
       "single-split input must keep the spreading exchange")
     assert(one.rdd.getNumPartitions == par)
-    val many = SparkEntry.spread(
+    val many = graft.pipeline.CorpusPipeline.spread(
       spark.read.parquet(s"$dir/many").select(col("doc_id")))
     assert(!hasRoundRobin(many),
       "a pre-split input must NOT pay a repartition exchange")
