@@ -1,5 +1,6 @@
 package graft
 
+import graft.functions.Money
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -56,7 +57,7 @@ object SkewBench {
       .hotColdJoin(base, build, Seq("key"), hotThreshold = nRows / 20)
       .agg(count(lit(1)), sum(length(col("dim_val")))).collect()
     def plainAgg() = base.groupBy("key")
-      .agg(count(lit(1)), sum(col("l_extendedprice").cast("decimal(18,4)")))
+      .agg(count(lit(1)), Money.sum(col("l_extendedprice")))
       .collect()
     def saltedAgg() = graft.operators.Skew
       .saltedCountSum(base, Seq("key"), Seq("l_extendedprice"), salt = 32)

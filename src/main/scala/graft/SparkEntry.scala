@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{Normalize, RowHash}
+import graft.functions.{Money, Normalize, RowHash}
 import graft.operators._
 import graft.pipeline.{Runner, Sinks, TableSpec}
 import graft.pipeline.CorpusPipeline.spread
@@ -50,7 +50,7 @@ object SparkEntry {
   /** Exact decimal sum rendered as double — the one money-sum shape both
     * engines agree on bit-for-bit. */
   private def moneySum(c: String): Column =
-    sum(col(c).cast("decimal(18,4)")).cast("double").as(s"sum_$c")
+    Money.sum(col(c)).cast("double").as(s"sum_$c")
 
   // ---- constructed HTML fixture pages (r12) -------------------------
   // Both engines build the IDENTICAL page string from the documents
@@ -2694,7 +2694,7 @@ object SparkEntry {
           col("c_custkey") === col("o_custkey"), "left_outer")
         .groupBy("c_custkey")
         .agg(count(col("o_orderkey")).as("n_orders"),
-          coalesce(sum(col("o_totalprice").cast("decimal(18,4)")), lit(0).cast("decimal(18,4)"))
+          coalesce(Money.sum(col("o_totalprice")), lit(0).cast("decimal(18,4)"))
             .cast("double").as("sum_o_totalprice"))
         .orderBy("c_custkey")),
     "q_j6_align_diff" -> ((s, d) => {
@@ -2715,7 +2715,7 @@ object SparkEntry {
       val plan = j.queryExecution.executedPlan.toString
       j.groupBy("c_mktsegment")
         .agg(count(lit(1)).as("n_orders"),
-          sum(col("o_totalprice").cast("decimal(18,4)"))
+          Money.sum(col("o_totalprice"))
             .cast("double").as("sum_price"))
         .withColumn("bucketed_no_exchange_ok", lit(!plan.contains("Exchange")))
         .orderBy("c_mktsegment")

@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.functions.Money
+import graft.operators.Reconcile.{formatMonth, monthStart}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -11,6 +13,11 @@ import org.apache.spark.sql.functions._
   * All are single hash-aggregates (partial map-side + final) or
   * agg-then-small-sort shapes — at 100 TB each is one shuffle whose width is
   * the group-key cardinality (months × states = tiny), never the data.
+  *
+  * Per row they do primitive work only, as in [[Reconcile]]: months group
+  * on `date_trunc('MONTH', d)` and are formatted `yyyy-MM` once per group,
+  * and money goes through [[graft.functions.Money]], which equals
+  * `cast(decimal(18,4))` value for value (its scaladoc says why).
   */
 object Aggregates {
 
@@ -18,23 +25,26 @@ object Aggregates {
     * (compare_historico_mensual.py:76-77, compare_noviembre_2025.py:107-118).
     */
   def monthStateCounts(df: DataFrame, dateCol: String, stateCol: String): DataFrame =
-    df.filter(col(dateCol).isNotNull)
-      .groupBy(date_format(col(dateCol), "yyyy-MM").as("month"),
-        col(stateCol).as("state"))
-      .agg(count(lit(1)).as("n"))
+    formatMonth(df.filter(col(dateCol).isNotNull)
+      .groupBy(monthStart(col(dateCol)).as("month"), col(stateCol).as("state"))
+      .agg(count(lit(1)).as("n")))
 
-  /** A2 (report shape): months × states pivoted wide, one row per month.
-    * `states` must be the closed domain (the reference hard-codes its
-    * ESTLIQUIDA values) — an explicit pivot list avoids the
-    * collect-distinct-first pass Spark would otherwise run.
+  /** A2 (report shape): months × states pivoted wide, one row per month,
+    * one count column per listed state (named after it, 0 when the month
+    * has none). `states` must be the closed domain (the reference
+    * hard-codes its ESTLIQUIDA values); rows in other states count in no
+    * column. One aggregate with a `count_if` per state: Spark's `pivot`
+    * would plan a (month, state) aggregate and a second, pivoting one.
     */
   def monthStatePivot(df: DataFrame, dateCol: String, stateCol: String,
-                      states: Seq[String]): DataFrame =
-    df.filter(col(dateCol).isNotNull)
-      .groupBy(date_format(col(dateCol), "yyyy-MM").as("month"))
-      .pivot(stateCol, states)
-      .agg(count(lit(1)))
-      .na.fill(0)
+                      states: Seq[String]): DataFrame = {
+    val counts = states.map(v =>
+      count_if(col(stateCol) <=> lit(v)).as(Option(v).getOrElse("null")))
+    val byMonth = df.filter(col(dateCol).isNotNull)
+      .groupBy(monthStart(col(dateCol)).as("month"))
+    formatMonth(if (counts.isEmpty) byMonth.agg(Map.empty[String, String])
+      else byMonth.agg(counts.head, counts.tail: _*))
+  }
 
   /** A1+A2+A8 in ONE pass: `ROLLUP(month, state)` emits the per-
     * (month, state) cells, the per-month subtotals (state NULL) and the
@@ -46,11 +56,9 @@ object Aggregates {
     */
   def monthStateRollup(df: DataFrame, dateCol: String, stateCol: String,
                        amountCol: String): DataFrame =
-    df.filter(col(dateCol).isNotNull)
-      .rollup(date_format(col(dateCol), "yyyy-MM").as("month"),
-        col(stateCol).as("state"))
-      .agg(count(lit(1)).as("n"),
-        sum(col(amountCol).cast("decimal(18,4)")).cast("double").as("sum_amt"))
+    formatMonth(df.filter(col(dateCol).isNotNull)
+      .rollup(monthStart(col(dateCol)).as("month"), col(stateCol).as("state"))
+      .agg(count(lit(1)).as("n"), Money.sum(col(amountCol)).cast("double").as("sum_amt")))
 
   /** A4: global money sums + derived debt = charged - paid
     * (compare_noviembre_2025.py:168-190). DECIMAL end-to-end: exact,
@@ -60,8 +68,8 @@ object Aggregates {
     // keep Spark's widened sum type (decimal(28,4)) — narrowing back to
     // (18,4) would overflow/throw once totals pass 10^14 at scale
     df.agg(
-        sum(col(chargedCol).cast("decimal(18,4)")).as("total_charged"),
-        sum(col(paidCol).cast("decimal(18,4)")).as("total_paid"),
+        Money.sum(col(chargedCol)).as("total_charged"),
+        Money.sum(col(paidCol)).as("total_paid"),
         count(lit(1)).as("n_rows"))
       .withColumn("total_debt", col("total_charged") - col("total_paid"))
 
@@ -117,7 +125,7 @@ object Aggregates {
     import org.apache.spark.sql.expressions.Window
     val daily = df.filter(col(dateCol).isNotNull)
       .groupBy(to_date(col(dateCol)).as("day"))
-      .agg(sum(col(valueCol).cast("decimal(18,4)")).as("__q"))
+      .agg(Money.sum(col(valueCol)).as("__q"))
     val w = Window.orderBy(unix_date(col("day")))
       .rangeBetween(-(days - 1), 0)
     daily.select(col("day"),

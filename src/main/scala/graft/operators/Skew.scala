@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.Money
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -52,7 +53,7 @@ object Skew {
     val partial = df.withColumn("__salt", saltCol(df, salt))
       .groupBy((keys :+ "__salt").map(col): _*)
       .agg(count(lit(1)).as("__n"),
-        amountCols.map(c => sum(col(c).cast("decimal(18,4)")).as(s"__s_$c")): _*)
+        amountCols.map(c => Money.sum(col(c)).as(s"__s_$c")): _*)
     partial.groupBy(keys.map(col): _*)
       .agg(sum(col("__n")).as("n_rows"),
         amountCols.map(c => sum(col(s"__s_$c")).cast("double").as(s"sum_$c")): _*)

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.Money
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -84,7 +85,7 @@ object TimeSeries {
     require(threshold > 0, s"anomaliesZScore: threshold must be > 0, got $threshold")
     val daily = df.filter(col(dateCol).isNotNull)
       .groupBy(col(keyCol), to_date(col(dateCol)).as("day"))
-      .agg(sum(col(valueCol).cast("decimal(18,4)")).as("__q"))
+      .agg(Money.sum(col(valueCol)).as("__q"))
     val w = Window.partitionBy(col(keyCol)).orderBy(unix_date(col("day")))
       .rangeBetween(-days, -1)
     val n = count(lit(1)).over(w)

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.functions.Money
 import graft.operators.Merge
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -58,7 +59,7 @@ object Streams {
                      lateness: String = "1 hour",
                      amountCol: Option[String] = None): DataFrame = {
     val aggs: Seq[Column] = count(lit(1)).as("n") +: amountCol.toSeq.map(a =>
-      sum(col(a).cast("decimal(18,4)")).cast("double").as(s"sum_$a"))
+      Money.sum(col(a)).cast("double").as(s"sum_$a"))
     events.withWatermark(tsCol, lateness)
       .groupBy(window(col(tsCol), windowLen).as("w"), col(keyCol))
       .agg(aggs.head, aggs.tail: _*)

@@ -22,12 +22,16 @@ count for neither side) and two verdicts:
   median, is wider than the bound and some change run does not beat every
   parent run; otherwise `ok`.
 
-It also prints the share of failed operations per side. It reads only
+It also prints the share of failed operations per side and, from the
+`op <name> median=...` lines perfbench prints before its JSON line (kept
+in each log record as `ops`), a table of every operation's median seconds
+per side: which operation moved, without a traced run. It reads only
 BENCHMARK.json and perfbench/ of each checkout.
 """
 import argparse
 import json
 import pathlib
+import re
 import statistics
 import subprocess
 import sys
@@ -44,17 +48,22 @@ def seeds_arg(text):
     return out
 
 
+OP_LINE = re.compile(r"^op (\S+) median=([0-9.eE+-]+) ")
+
+
 def run_once(checkout, workload, seed, seconds):
-    """One untraced run; its result JSON, or None when it produced none."""
+    """One untraced run: its result JSON (None when it produced none) and
+    each operation's median seconds from its `op` lines."""
     proc = subprocess.run(
         [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
          "--seconds", str(seconds), "--trace", "0"],
         cwd=checkout, stdin=subprocess.DEVNULL, stdout=subprocess.PIPE,
         stderr=subprocess.DEVNULL, text=True)
     lines = proc.stdout.strip().splitlines()
+    ops = {m.group(1): float(m.group(2)) for m in map(OP_LINE.match, lines) if m}
     if proc.returncode not in (0, 1) or not lines or not lines[-1].startswith("{"):
-        return None
-    return json.loads(lines[-1])
+        return None, ops
+    return json.loads(lines[-1]), ops
 
 
 def quartiles(xs):
@@ -62,6 +71,24 @@ def quartiles(xs):
         return xs[0], xs[0]
     q = statistics.quantiles(xs, n=4)
     return q[0], q[2]
+
+
+def op_table(w, runs):
+    """Per operation: the median over runs of each run's median seconds."""
+    per = {}
+    for r in runs:
+        if r["workload"] == w:
+            for op, sec in r.get("ops", {}).items():
+                per.setdefault(op, {}).setdefault(r["side"], []).append(sec)
+    if not per:
+        return
+    print(f"  {'op':12s} {'parent s':>9s} {'change s':>9s}  ratio  runs")
+    for op in sorted(per):
+        par, chg = per[op].get("parent", []), per[op].get("change", [])
+        if par and chg:
+            pm, cm = statistics.median(par), statistics.median(chg)
+            ratio = f"{cm / pm:.3f}" if pm else "  -  "
+            print(f"  {op:12s} {pm:9.4f} {cm:9.4f}  {ratio}  {len(par)}/{len(chg)}")
 
 
 def report(runs, bench):
@@ -108,6 +135,7 @@ def report(runs, bench):
                   f"ratio {cm / pm:.3f}  wins {wins}/{len(pairs)}  "
                   f"gain {'yes' if gain else 'no'}  "
                   f"bound {m['bound']:.2f} {verdict}")
+        op_table(w, runs)
     return ok
 
 
@@ -138,8 +166,9 @@ def main():
         for i, seed in enumerate(a.seeds):
             order = [("parent", parent), ("change", ROOT)]
             for side, checkout in (order if i % 2 == 0 else order[::-1]):
-                result = run_once(checkout, w, seed, bench["run_seconds"])
-                run = {"workload": w, "seed": seed, "pair": i, "side": side, "result": result}
+                result, ops = run_once(checkout, w, seed, bench["run_seconds"])
+                run = {"workload": w, "seed": seed, "pair": i, "side": side, "result": result,
+                       "ops": ops}
                 runs.append(run)
                 rs = result["metrics"]["round_s"]["value"] if result else None
                 print(f"{w} seed {seed} {side}: round_s {rs}", flush=True)
