@@ -1,18 +1,20 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.expressions.{Abs, And, Cast, Divide, EqualTo,
-  EvalMode, Expression, If, LessThan, Literal, MakeDecimal, Multiply, Rint,
-  RuntimeReplaceable, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Abs, And, Cast, Concat, CreateMap, Divide,
+  EqualTo, EvalMode, Expression, If, IsNaN, LessThan, Literal, MakeDecimal, Multiply, Or,
+  RaiseError, Rint, RuntimeReplaceable, UnaryExpression}
 import org.apache.spark.sql.functions
-import org.apache.spark.sql.types.{DataType, DecimalType, DoubleType, FloatType, LongType}
+import org.apache.spark.sql.types.{DataType, DecimalType, DoubleType, FloatType, LongType,
+  StringType}
 
 /** Exact money arithmetic: amounts become DECIMAL(18,4) before they are
   * summed, so totals are exact and independent of partition merge order
   * (SURVEY.md §7.4 trap 8) — a double sum's low bits would depend on it.
   *
   * [[decimal4]] is `cast(c as decimal(18,4))`, value for value, with ANSI on
-  * or off. Spark compiles that cast of a DOUBLE or FLOAT into
+  * or off, except for the non-finite amounts below. Spark compiles that
+  * cast of a DOUBLE or FLOAT into
   * `Decimal(BigDecimal.valueOf(d))`: one `Double.toString` and one
   * `BigDecimal` per row. [[decimal4]] first tries primitive arithmetic:
   * `r = rint(d·10⁴)`; when `|d| < 2³⁸` and `r / 10⁴ == d` it emits the
@@ -27,12 +29,22 @@ import org.apache.spark.sql.types.{DataType, DecimalType, DoubleType, FloatType,
   * than half a step of scale 4 (0.5·10⁻⁴); HALF_UP rounding of Spark's
   * value to scale 4 therefore lands on `r`. `|r| < 2.8·10¹⁵` fits
   * precision 18, so neither path can overflow where the other does not.
+  *
+  * Non-finite amounts: Spark's cast turns NaN and ±Inf into NULL even with
+  * ANSI on, so a sum would silently leave those rows out. With ANSI on
+  * (the cast's eval mode) [[decimal4]] raises instead: a
+  * `SparkRuntimeException` with condition `USER_RAISED_EXCEPTION` and the
+  * message `Money: non-finite amount <value> has no DECIMAL(18,4) value`.
+  * With ANSI off they stay NULL, as the cast has them. The check sits in
+  * the fallback branch only; the fast path's test is already false for
+  * NaN and ±Inf.
   */
 object Money {
   private val Type = DecimalType(18, 4)
 
   /** `c.cast("decimal(18,4)")`, computed without `Double.toString` for the
-    * doubles and floats that have at most four decimals. Alias it when it
+    * doubles and floats that have at most four decimals; with ANSI on, a
+    * NaN or ±Inf raises instead of the cast's NULL. Alias it when it
     * stands alone in a select: its generated name is the cast's SQL, where
     * a bare cast of a column keeps the column's name. */
   private[graft] def decimal4(c: Column): Column =
@@ -61,9 +73,19 @@ private[graft] final case class ExactDecimal4(child: Expression)
       // FLOAT widens to DOUBLE exactly, which is what Spark's cast does too
       val d = if (c.child.dataType == FloatType) Cast(c.child, DoubleType) else c.child
       val r = Rint(Multiply(d, Scale))
+      val fallback =
+        if (c.evalMode != EvalMode.ANSI) c
+        else {
+          val message = Concat(Seq(Literal("Money: non-finite amount "),
+            Cast(d, StringType), Literal(" has no DECIMAL(18,4) value")))
+          If(Or(IsNaN(d), EqualTo(Abs(d), Literal(Double.PositiveInfinity))),
+            RaiseError(Literal("USER_RAISED_EXCEPTION"),
+              CreateMap(Seq(Literal("errorMessage"), message)), c.dataType),
+            c)
+        }
       If(And(LessThan(Abs(d), Limit), EqualTo(Divide(r, Scale), d)),
         MakeDecimal(Cast(r, LongType, None, EvalMode.LEGACY), 18, 4, nullOnOverflow = false),
-        c)
+        fallback)
     case _ => child
   }
 

@@ -74,15 +74,16 @@ object Aggregates {
       .withColumn("total_debt", col("total_charged") - col("total_paid"))
 
   /** A5 + A6 + A8: date-range profile — min/max date, distinct active days,
-    * row count (compare_noviembre_2025.py:138-162). At 100 TB swap
-    * `countDistinct` for `approx_count_distinct` (HLL) — noted, not default,
-    * because the oracle gate needs the exact value.
+    * row count (compare_noviembre_2025.py:138-162). The distinct days are
+    * the size of the day set, which holds at most one entry per calendar
+    * day: one aggregation level, where `countDistinct` would plan a second
+    * one (and a second shuffle) under the min/max/count.
     */
   def dateProfile(df: DataFrame, dateCol: String): DataFrame =
     df.filter(col(dateCol).isNotNull).agg(
       min(to_date(col(dateCol))).as("first_day"),
       max(to_date(col(dateCol))).as("last_day"),
-      countDistinct(to_date(col(dateCol))).as("n_days"),
+      size(collect_set(to_date(col(dateCol)))).cast("long").as("n_days"),
       count(lit(1)).as("n_rows"))
 
   /** O4: last-k months of a monthly aggregate, re-sorted ascending

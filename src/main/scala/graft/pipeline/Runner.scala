@@ -1,5 +1,8 @@
 package graft.pipeline
 
+import java.util.concurrent.{Callable, ConcurrentLinkedQueue, ExecutionException, Executors,
+  ThreadFactory}
+
 import graft.functions.RowHash
 import graft.operators.{Filters, Merge}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -11,8 +14,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Pure DataFrame-in/DataFrame-out; the sink is parameterized so tests run
   * against in-memory targets and production runs write parquet. Tables are
-  * independent, so a production driver may submit them concurrently — Spark's
-  * scheduler interleaves their jobs (the reference is forced sequential).
+  * independent (the reference runs them one after another only because it
+  * is forced sequential), so [[runAll]] and [[syncIncremental]] run them
+  * concurrently: each call starts a fresh pool of at most
+  * `min(tables, defaultParallelism)` daemon threads and Spark's scheduler
+  * interleaves the tables' jobs, which are mostly one task each. Results
+  * keep spec order; spec names must be distinct, since each table owns its
+  * target path and its `__staging` sibling.
   */
 object Runner {
 
@@ -59,11 +67,14 @@ object Runner {
     }
 
   /** Run every spec; `sink` persists each frame (e.g. parquet overwrite, or
-    * a Merge.apply against existing state for Incremental mode).
+    * a Merge.apply against existing state for Incremental mode). Tables run
+    * concurrently (see [[Runner]]): `sink` may be called for different
+    * tables at the same time, from threads other than the caller's, so
+    * whatever state it shares across tables must be thread-safe.
     */
   def runAll(spark: SparkSession, sfDir: String, specs: Seq[TableSpec])
             (sink: (TableSpec, DataFrame) => Long): Seq[TableResult] =
-    specs.map { spec =>
+    eachTable(spark, specs) { spec =>
       try {
         val rows = sink(spec, loadTable(spark, sfDir, spec))
         TableResult(spec.name, rows, None)
@@ -92,11 +103,12 @@ object Runner {
     * (schema-evolving the target first), committed via a staging swap
     * because the merge plan reads the path it replaces — with per-table
     * error isolation and a count-verified summary (`TableResult.mode`
-    * records which path ran), like the reference's RESUMEN FINAL.
+    * records which path ran), like the reference's RESUMEN FINAL. Tables
+    * run concurrently, as in [[runAll]].
     */
   def syncIncremental(spark: SparkSession, sfDir: String, specs: Seq[TableSpec],
                       basePath: String, keyAudit: Boolean = true): Seq[TableResult] =
-    specs.map { spec =>
+    eachTable(spark, specs) { spec =>
       val path = s"$basePath/${spec.name}"
       try {
         // Bare rows: the merge branch hashes its source itself and mints
@@ -135,4 +147,49 @@ object Runner {
         case e: Exception => TableResult(spec.name, -1, Some(e.toString))
       }
     }
+
+  /** `f` over `specs`, results in spec order, on a fresh pool of
+    * `min(specs.size, defaultParallelism)` daemon threads (in the caller's
+    * thread when that is 1). The pool is made per call, never shared:
+    * Spark's local properties (job group, description, scheduler pool) and
+    * the active session are inheritable thread-locals, copied when a thread
+    * is created, so every pool thread carries the caller's and a reused
+    * thread would carry another caller's. `f` isolates its own table's
+    * exceptions; anything else it throws is rethrown, unwrapped, once every
+    * table has finished.
+    */
+  private def eachTable[R](spark: SparkSession, specs: Seq[TableSpec])
+                          (f: TableSpec => R): Seq[R] = {
+    val dups = specs.groupBy(_.name).collect { case (n, s) if s.size > 1 => n }
+    require(dups.isEmpty,
+      s"Runner: duplicate table spec names ${dups.toSeq.sorted.mkString(", ")}: " +
+        "tables sharing a name would race on one target path")
+    val width = math.min(specs.size, spark.sparkContext.defaultParallelism)
+    if (width <= 1) specs.map(f)
+    else {
+      val threads = new ConcurrentLinkedQueue[Thread]
+      val pool = Executors.newFixedThreadPool(width, new ThreadFactory {
+        def newThread(r: Runnable): Thread = {
+          val t = new Thread(r, s"graft-runner-${threads.size + 1}")
+          t.setDaemon(true)
+          threads.add(t)
+          t
+        }
+      })
+      try {
+        val running =
+          specs.toVector.map(spec => pool.submit(new Callable[R] { def call(): R = f(spec) }))
+        val done = running.map { r =>
+          try Right(r.get()) catch { case e: ExecutionException => Left(e.getCause) }
+        }
+        done.map(_.fold(e => throw e, identity))
+      } finally {
+        // Every table has finished here unless the caller was interrupted,
+        // and then the wait lets the running ones finish: no pool thread,
+        // and no job it started, outlives the call.
+        pool.shutdown()
+        threads.forEach(_.join())
+      }
+    }
+  }
 }

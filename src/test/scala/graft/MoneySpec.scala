@@ -77,30 +77,41 @@ class MoneySpec extends SparkSpec {
     assert(sums.head().getDecimal(0).toPlainString == "3.7500")
   }
 
-  test("Money.decimal4: NaN, ±Inf and 1e15 give what the cast gives, NULL or the same error") {
-    val bad = Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity, 1e15, -1e15)
+  test("Money.decimal4: NaN, ±Inf are NULL with ANSI off, raise with ANSI on; 1e15 as cast") {
+    val nonFinite = Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)
+    val bad = nonFinite ++ Seq(1e15, -1e15)
     withAnsi(false) {
       val df = bad.map(d => (d, d.toFloat)).toDF("d", "f")
       assert(df.select(Money.decimal4(col("d")), Money.decimal4(col("f")))
         .collect().forall(r => r.isNullAt(0) && r.isNullAt(1)))
+      assert(df.agg(Money.sum(col("d"))).head().isNullAt(0))
     }
-    /** The rows, or the condition of the first Spark error in the chain. */
-    def outcome(body: => Array[org.apache.spark.sql.Row]): Either[String, Seq[String]] =
+    /** The rows, or the condition and message of the first Spark error in the chain. */
+    def outcome(body: => Array[org.apache.spark.sql.Row]): Either[(String, String), Seq[String]] =
       try Right(body.toSeq.map(_.toString)) catch {
         case e: Exception => Left(Iterator.iterate[Throwable](e)(_.getCause)
           .takeWhile(_ != null).collectFirst {
-            case t: SparkThrowable if t.getCondition != null => t.getCondition
-          }.getOrElse(e.getClass.getName))
+            case t: SparkThrowable if t.getCondition != null => (t.getCondition, t.getMessage)
+          }.getOrElse((e.getClass.getName, e.getMessage)))
       }
     withAnsi(true) {
-      var errors = 0
       for (d <- bad; c <- Seq("d", "f")) {
         val df = Seq((d, d.toFloat)).toDF("d", "f")
-        val want = outcome(df.select(col(c).cast("decimal(18,4)")).collect())
-        assert(outcome(df.select(Money.decimal4(col(c))).collect()) == want, s"$c = $d")
-        if (want.isLeft) errors += 1
+        val got = outcome(df.select(Money.decimal4(col(c))).collect())
+        if (nonFinite.exists(_.equals(d))) {
+          // the cast itself gives NULL here: Money raises instead
+          assert(outcome(df.select(col(c).cast("decimal(18,4)")).collect()) == Right(Seq("[null]")))
+          val Left((condition, message)) = got: @unchecked
+          assert(condition == "USER_RAISED_EXCEPTION", s"$c = $d: $got")
+          assert(message.contains(s"Money: non-finite amount $d has no DECIMAL(18,4) value"),
+            s"$c = $d: $message")
+          assert(outcome(df.agg(Money.sum(col(c))).collect()) == got, s"sum of $c = $d")
+        } else {
+          val want = outcome(df.select(col(c).cast("decimal(18,4)")).collect())
+          assert(want.isLeft, s"$c = $d: the ANSI cast raised no error")
+          assert(got.left.map(_._1) == want.left.map(_._1), s"$c = $d")
+        }
       }
-      assert(errors > 0, "ANSI mode raised no cast error at all")
     }
   }
 

@@ -236,6 +236,19 @@ class ReconcileSpec extends SparkSpec {
     }.isEmpty, join.toString)
   }
 
+  test("dateProfile equals its countDistinct form on every date type and on empty " +
+    "input, with one exchange") {
+    def distinctForm(df: DataFrame, d: String): DataFrame =
+      df.filter(col(d).isNotNull).agg(
+        min(to_date(col(d))).as("first_day"), max(to_date(col(d))).as("last_day"),
+        countDistinct(to_date(col(d))).as("n_days"), count(lit(1)).as("n_rows"))
+    for ((kind, df) <- monthInputs :+ ("empty" -> monthInputs.head._2.filter(lit(false))))
+      assertSameFrame(Aggregates.dateProfile(df, "d"), distinctForm(df, "d"), s"dateProfile on $kind")
+    val plan = stripAqe(Aggregates.dateProfile(li, "d"))
+    assert(plan.collect { case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e }
+      .length == 1, plan.toString)
+  }
+
   private def stripAqe(df: DataFrame) = df.queryExecution.executedPlan match {
     case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.initialPlan
     case p => p

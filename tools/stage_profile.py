@@ -5,7 +5,11 @@ Prints one row per SQL execution: wall seconds, jobs, stages, tasks, task
 seconds (executor run time), shuffle read and write bytes, and the
 execution's description (Spark's call site of the action). Jobs started
 outside any SQL execution (RDD actions, checkpoints) are grouped under
-execution "-". The last row is the total.
+execution "-". The last row is the total; its wall is the sum of the
+executions' walls, which counts overlapping executions (tables a `Runner`
+call runs concurrently) more than once. A last line therefore prints the
+elapsed seconds (the union of the execution intervals) and the overlap
+(summed wall / elapsed: 1.0 when no two executions overlap).
 
     python3 tools/stage_profile.py LOG [--sort task_s] [--limit N]
 
@@ -90,6 +94,25 @@ def profile(lines):
     return list(execs.values())
 
 
+def union_seconds(intervals):
+    """Seconds covered by the union of (start ms, end ms) intervals.
+
+    >>> union_seconds([(1000, 4000), (2000, 5000)])
+    4.0
+    >>> union_seconds([(1000, 2000), (3000, 3500), (3100, 3200)])
+    1.5
+    """
+    covered, reach = 0, None
+    for lo, hi in sorted(intervals):
+        if reach is None or lo > reach:
+            covered += hi - lo
+            reach = hi
+        elif hi > reach:
+            covered += hi - reach
+            reach = hi
+    return covered / 1000.0
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("log")
@@ -122,6 +145,10 @@ def main():
                      total["stages"], total["tasks"], f"{total['task_s']:.2f}",
                      total["shuffle_read"], total["shuffle_write"],
                      f"{len(rows)} executions"))
+    elapsed = union_seconds([(r["start"], r["end"]) for r in rows
+                             if r["start"] is not None and r["end"] is not None])
+    overlap = total["wall_s"] / elapsed if elapsed > 0 else 0.0
+    print(f"elapsed_s {elapsed:.2f}  overlap {overlap:.2f}")
 
 
 if __name__ == "__main__":
