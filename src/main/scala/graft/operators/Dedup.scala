@@ -398,18 +398,15 @@ object Dedup {
   def simHashAppendIndex(newDocs: DataFrame, idCol: String, textCol: String,
                          path: String,
                          batchTag: Option[String] = None): Unit = {
-    val spark = newDocs.sparkSession
-    val rows = simHashSignatures(newDocs, idCol, textCol)
+    def rows(docs: DataFrame) = simHashSignatures(docs, idCol, textCol)
       .withColumnRenamed("simhash", "sig")
     batchTag match {
       case None =>
-        rows.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(path)
+        rows(newDocs).write.mode(org.apache.spark.sql.SaveMode.Append).parquet(path)
       case Some(tag) =>
-        val sig = graft.pipeline.BatchAppend.contentSig(newDocs,
-          Seq(idCol, textCol))
-        graft.pipeline.BatchAppend.exactlyOnce(spark, path, tag, sig,
-          Seq(path)) {
-          graft.pipeline.BatchAppend.appendBatchFiles(rows, path, tag)
+        graft.pipeline.BatchAppend.exactlyOnce(path, tag, newDocs,
+          Seq(idCol, textCol), Seq(path)) { c =>
+          c.append(rows(c.frame), path)
         }: Unit
     }
   }
@@ -433,7 +430,7 @@ object Dedup {
     require(maxHamming >= 0 && maxHamming <= 31,
       s"simHashProbeIndex: maxHamming must be in [0,31], got $maxHamming")
     val idx = graft.pipeline.Tombstones.exclude(
-      spark.read.parquet(path), path) // deleted docs never pair
+      graft.pipeline.Sinks.readParquet(spark, path), path) // deleted docs never pair
     require(Seq("id", "sig").forall(idx.columns.contains),
       s"simHashProbeIndex: $path is not a SimHash index (want columns id, sig)")
     val nBands = maxHamming + 1
@@ -949,20 +946,16 @@ object Dedup {
             .parquet(s"$path/relabels")
         (nNew, nMerge)
       case Some(tag) =>
-        val sig = graft.pipeline.BatchAppend.contentSig(newPairs,
-          Seq("id_a", "id_b"))
         var out = (0L, 0L) // a replayed committed batch appends nothing new
-        graft.pipeline.BatchAppend.exactlyOnce(spark, path, tag, sig,
-          Seq(s"$path/labels", s"$path/relabels")) {
+        // the rows are checkpointed joins of the batch with the stored
+        // labels, so the signature is computed by its own job
+        graft.pipeline.BatchAppend.exactlyOnce(path, tag, newPairs,
+          Seq("id_a", "id_b"), Seq(s"$path/labels", s"$path/relabels")) { c =>
           val (newIds, merges) = compute()
           val nNew = newIds.count()
           val nMerge = merges.count()
-          if (nNew > 0)
-            graft.pipeline.BatchAppend.appendBatchFiles(newIds,
-              s"$path/labels", tag)
-          if (nMerge > 0)
-            graft.pipeline.BatchAppend.appendBatchFiles(merges,
-              s"$path/relabels", tag)
+          if (nNew > 0) c.append(newIds, s"$path/labels")
+          if (nMerge > 0) c.append(merges, s"$path/relabels")
           out = (nNew, nMerge)
         }
         out
@@ -1374,23 +1367,21 @@ object Dedup {
                            batchTag: Option[String] = None): Unit = {
     val k = substringIndexMeta(newDocs.sparkSession, path,
       "substringAppendIndex")
-    val rows = substrWindows(newDocs, idCol, textCol, k)
+    def rows(docs: DataFrame) = substrWindows(docs, idCol, textCol, k)
       .groupBy("__fp").agg(count(lit(1)).as("cnt"))
       .select(col("__fp").as("fp"), col("cnt"))
     batchTag match {
       case None =>
-        rows.write.mode(org.apache.spark.sql.SaveMode.Append)
+        rows(newDocs).write.mode(org.apache.spark.sql.SaveMode.Append)
           .parquet(s"$path/fps")
       case Some(tag) =>
         // additive partial counts: a foreachBatch crash-replay would
         // double-count every window the batch contributed (r17 —
-        // the cmsAppendIndex treatment)
-        val sig = graft.pipeline.BatchAppend.contentSig(newDocs,
-          Seq(idCol, textCol))
-        graft.pipeline.BatchAppend.exactlyOnce(newDocs.sparkSession, path,
-          tag, sig, Seq(s"$path/fps")) {
-          graft.pipeline.BatchAppend.appendBatchFiles(rows, s"$path/fps",
-            tag)
+        // the cmsAppendIndex treatment); the rows are grouped above the
+        // batch, so the signature is computed by its own job
+        graft.pipeline.BatchAppend.exactlyOnce(path, tag, newDocs,
+          Seq(idCol, textCol), Seq(s"$path/fps")) { c =>
+          c.append(rows(c.frame), s"$path/fps")
         }: Unit
     }
   }
@@ -1814,20 +1805,26 @@ object Dedup {
       .parquet(s"$path/_meta")
   }
 
+  /** The index's `_meta` parameters (shingleN, bands, rowsPerBand), read
+    * on the driver from the one-row sidecar ([[graft.pipeline.Sinks.driverRows]]).
+    * A missing or unreadable sidecar raises `IllegalStateException`; one
+    * holding other than one row is malformed.
+    */
   private def minHashIndexMeta(spark: org.apache.spark.sql.SparkSession,
                                path: String, what: String)
       : (Int, Int, Int) = {
+    val fields = Seq("shingle_n", "bands", "rows_per_band")
     val rows =
-      try spark.read.parquet(s"$path/_meta")
-        .select("shingle_n", "bands", "rows_per_band").collect()
+      try graft.pipeline.Sinks.driverRows(spark, s"$path/_meta")
+        .map(g => fields.map(f => g.getInteger(f, 0)))
       catch {
-        case e: org.apache.spark.sql.AnalysisException =>
+        case e @ (_: java.io.IOException | _: RuntimeException) =>
           throw new IllegalStateException(
             s"$what: $path has no readable parameters sidecar (_meta); " +
               "rewrite the index with minHashWriteIndex", e)
       }
     require(rows.length == 1, s"$what: $path has a malformed _meta sidecar")
-    (rows.head.getInt(0), rows.head.getInt(1), rows.head.getInt(2))
+    (rows.head(0), rows.head(1), rows.head(2))
   }
 
   /** O(batch) MinHash index maintenance (late r17 — the verb the
@@ -1844,26 +1841,29 @@ object Dedup {
     * probes stay correct (the candidate pair set is distinct-ed) but
     * every later probe pays the duplicated join rows and the index
     * doubles silently. Committed (tag, content) replays no-op
-    * ([[graft.pipeline.BatchAppend]]).
+    * ([[graft.pipeline.BatchAppend]]). Only the branch that writes reads
+    * `_meta`: a first tagged commit is its one write (the batch signature
+    * is observed in that pass), a committed replay its marker listing and
+    * one signature job.
     */
   def minHashAppendIndex(newDocs: DataFrame, idCol: String, textCol: String,
                          path: String,
                          batchTag: Option[String] = None): Unit = {
-    val spark = newDocs.sparkSession
-    val (sn, bands, rpb) = minHashIndexMeta(spark, path, "minHashAppendIndex")
-    val rows = newDocs.select(col(idCol).as("id"),
-        graft.expressions.TextHashExpressions
-          .minHashSignature(col(textCol), sn, bands * rpb).as("sig"))
-      .filter(col("sig").isNotNull)
+    def rows(docs: DataFrame) = {
+      val (sn, bands, rpb) =
+        minHashIndexMeta(newDocs.sparkSession, path, "minHashAppendIndex")
+      docs.select(col(idCol).as("id"),
+          graft.expressions.TextHashExpressions
+            .minHashSignature(col(textCol), sn, bands * rpb).as("sig"))
+        .filter(col("sig").isNotNull)
+    }
     batchTag match {
       case None =>
-        rows.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(path)
+        rows(newDocs).write.mode(org.apache.spark.sql.SaveMode.Append).parquet(path)
       case Some(tag) =>
-        val sig = graft.pipeline.BatchAppend.contentSig(newDocs,
-          Seq(idCol, textCol))
-        graft.pipeline.BatchAppend.exactlyOnce(spark, path, tag, sig,
-          Seq(path)) {
-          graft.pipeline.BatchAppend.appendBatchFiles(rows, path, tag)
+        graft.pipeline.BatchAppend.exactlyOnce(path, tag, newDocs,
+          Seq(idCol, textCol), Seq(path)) { c =>
+          c.append(rows(c.frame), path)
         }: Unit
     }
   }
@@ -1880,7 +1880,10 @@ object Dedup {
     * Scale shape: the corpus side groups its (band, bucket) ids in one
     * shuffle of ids and ints, the bucket guard checked in that pass; the
     * new side joins those buckets; signatures re-attach to the (tiny)
-    * candidate pair set, never ride the band explode.
+    * candidate pair set, never ride the band explode. Tombstones are
+    * excluded once, on the banded side: the pairs then hold only live
+    * corpus ids, so the signatures re-attach from the stored rows. The
+    * index's schema and `_meta` are read on the driver (no Spark job).
     */
   def minHashProbeIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                         newDocs: DataFrame, idCol: String, textCol: String,
@@ -1893,12 +1896,12 @@ object Dedup {
         hash((b * rowsPerBand until (b + 1) * rowsPerBand)
           .map(i => element_at(col("sig"), i + 1)): _*)): _*)))
       .withColumnsRenamed(Map("pos" -> "band", "col" -> "bucket", "id" -> side))
+    val stored = graft.pipeline.Sinks.readParquet(spark, path)
+    require(Seq("id", "sig").forall(stored.columns.contains),
+      s"minHashProbeIndex: $path is not a MinHash index (want columns id, sig)")
     // tombstone exclusion (late r17): deleted docs never surface as
     // corpus-side candidates, before or after a physical purge
-    val idx = graft.pipeline.Tombstones.exclude(
-      spark.read.parquet(path), path)
-    require(Seq("id", "sig").forall(idx.columns.contains),
-      s"minHashProbeIndex: $path is not a MinHash index (want columns id, sig)")
+    val live = graft.pipeline.Tombstones.exclude(stored, path)
     // drift guard (late r17): when the parameters sidecar is present,
     // the probe's banding must match the write-time banding — probing
     // k=32 signatures as 4×4 silently halves every bucket's evidence.
@@ -1921,7 +1924,7 @@ object Dedup {
     // same pass (the r18 minHashCandidates shape): no separate guardrail
     // job over the whole index, and the checkpoint below still surfaces
     // an oversized bucket as the classic IllegalArgumentException.
-    val corpusBuckets = banded(idx, "corpus_id").groupBy("band", "bucket")
+    val corpusBuckets = banded(live, "corpus_id").groupBy("band", "bucket")
       .agg(collect_list(col("corpus_id")).as("__ids"))
     val guarded = Guardrails.boundedIds(col("__ids"), maxBucketRows,
       s"minHashProbeIndex(bands=$bands, rowsPerBand=$rowsPerBand)",
@@ -1935,7 +1938,7 @@ object Dedup {
       (a, b) => a === b), x => x)).cast("double") / k
     val res = Guardrails.rethrowBucketGuard(pairs
       .join(newSigs.select(col("id").as("new_id"), col("sig").as("sig_n")), Seq("new_id"))
-      .join(idx.select(col("id").as("corpus_id"), col("sig").as("sig_c")), Seq("corpus_id"))
+      .join(stored.select(col("id").as("corpus_id"), col("sig").as("sig_c")), Seq("corpus_id"))
       .select(col("new_id"), col("corpus_id"), est.as("jaccard_est"))
       .filter(col("jaccard_est") >= minEstJaccard)
       .localCheckpoint(true))

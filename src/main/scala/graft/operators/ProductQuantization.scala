@@ -489,15 +489,14 @@ object ProductQuantization {
   def pqAppendIndex(emb: DataFrame, idCol: String, vecCol: String,
                     path: String, batchTag: Option[String] = None): Unit = {
     val books = pqReadBooks(emb.sparkSession, path)
-    val codes = encode(emb, idCol, vecCol, books)
     batchTag match {
       case None =>
-        codes.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(path)
+        encode(emb, idCol, vecCol, books)
+          .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(path)
       case Some(tag) =>
-        val sig = graft.pipeline.BatchAppend.contentSig(emb, Seq(idCol, vecCol))
-        graft.pipeline.BatchAppend.exactlyOnce(emb.sparkSession, path, tag,
-          sig, Seq(path)) {
-          graft.pipeline.BatchAppend.appendBatchFiles(codes, path, tag)
+        graft.pipeline.BatchAppend.exactlyOnce(path, tag, emb,
+          Seq(idCol, vecCol), Seq(path)) { c =>
+          c.append(encode(c.frame, idCol, vecCol, books), path)
         }: Unit
     }
   }
@@ -583,18 +582,16 @@ object ProductQuantization {
   def opqAppendIndex(emb: DataFrame, idCol: String, vecCol: String,
                      path: String, batchTag: Option[String] = None): Unit = {
     val model = opqReadRotation(emb.sparkSession, path)
-    def rot = emb.filter(size(col(vecCol)) === model.dim)
+    def rot(e: DataFrame) = e.filter(size(col(vecCol)) === model.dim)
       .select(col(idCol).as("id"),
         graft.operators.Pca.projectCol(col(vecCol), model).as("rvec"))
     batchTag match {
-      case None => pqAppendIndex(rot, "id", "rvec", path)
+      case None => pqAppendIndex(rot(emb), "id", "rvec", path)
       case Some(tag) =>
-        val sig = graft.pipeline.BatchAppend.contentSig(emb, Seq(idCol, vecCol))
-        graft.pipeline.BatchAppend.exactlyOnce(emb.sparkSession, path, tag,
-          sig, Seq(path)) {
+        graft.pipeline.BatchAppend.exactlyOnce(path, tag, emb,
+          Seq(idCol, vecCol), Seq(path)) { c =>
           val books = pqReadBooks(emb.sparkSession, path)
-          graft.pipeline.BatchAppend.appendBatchFiles(
-            encode(rot, "id", "rvec", books), path, tag)
+          c.append(encode(rot(c.frame), "id", "rvec", books), path)
         }: Unit
     }
   }

@@ -446,11 +446,9 @@ object Profile {
           .write.mode(org.apache.spark.sql.SaveMode.Append)
           .parquet(s"$path/sketches")
       case Some(tag) =>
-        val sig = graft.pipeline.BatchAppend.contentSig(df, cols.map(_._1))
-        graft.pipeline.BatchAppend.exactlyOnce(df.sparkSession, path, tag,
-          sig, Seq(s"$path/sketches")) {
-          graft.pipeline.BatchAppend.appendBatchFiles(
-            kllSketchRows(df, cols.map(_._1), k), s"$path/sketches", tag)
+        graft.pipeline.BatchAppend.exactlyOnce(path, tag, df, cols.map(_._1),
+          Seq(s"$path/sketches")) { c =>
+          c.append(kllSketchRows(c.frame, cols.map(_._1), k), s"$path/sketches")
         }: Unit
     }
   }

@@ -233,20 +233,18 @@ object SemDedup {
                           batchTag: Option[String] = None): Unit = {
     val cents = readIndexCentroids(emb.sparkSession, path)
     val dim = cents.head.length
-    val rows = Similarity.quantizeEmbeddings(
-        emb.filter(size(col(vecCol)) === dim), idCol, vecCol)
+    def rows(e: DataFrame) = Similarity.quantizeEmbeddings(
+        e.filter(size(col(vecCol)) === dim), idCol, vecCol)
       .select(col("id"), col("qvec"),
         Similarity.ivfAssignTo(col("qvec"), cents).as("cell"))
     batchTag match {
       case None =>
-        rows.write.mode(org.apache.spark.sql.SaveMode.Append)
+        rows(emb).write.mode(org.apache.spark.sql.SaveMode.Append)
           .partitionBy("cell").parquet(path)
       case Some(tag) =>
-        val sig = graft.pipeline.BatchAppend.contentSig(emb, Seq(idCol, vecCol))
-        graft.pipeline.BatchAppend.exactlyOnce(emb.sparkSession, path, tag,
-          sig, Seq(path)) {
-          graft.pipeline.BatchAppend.appendBatchFiles(rows, path, tag,
-            partitionBy = Seq("cell"))
+        graft.pipeline.BatchAppend.exactlyOnce(path, tag, emb,
+          Seq(idCol, vecCol), Seq(path)) { c =>
+          c.append(rows(c.frame), path, partitionBy = Seq("cell"))
         }: Unit
     }
   }

@@ -634,18 +634,16 @@ object Similarity {
   def ivfAppendIndex(emb: DataFrame, idCol: String, vecCol: String,
                      path: String, batchTag: Option[String] = None): Unit = {
     val cents = ivfReadCentroids(emb.sparkSession, path)
-    val rows = emb.select(col(idCol).as("id"), col(vecCol).as("v"),
+    def rows(e: DataFrame) = e.select(col(idCol).as("id"), col(vecCol).as("v"),
       ivfAssignTo(col(vecCol), cents).as("cell"))
     batchTag match {
       case None =>
-        rows.write.mode(org.apache.spark.sql.SaveMode.Append)
+        rows(emb).write.mode(org.apache.spark.sql.SaveMode.Append)
           .partitionBy("cell").parquet(path)
       case Some(tag) =>
-        val sig = graft.pipeline.BatchAppend.contentSig(emb, Seq(idCol, vecCol))
-        graft.pipeline.BatchAppend.exactlyOnce(emb.sparkSession, path, tag,
-          sig, Seq(path)) {
-          graft.pipeline.BatchAppend.appendBatchFiles(rows, path, tag,
-            partitionBy = Seq("cell"))
+        graft.pipeline.BatchAppend.exactlyOnce(path, tag, emb,
+          Seq(idCol, vecCol), Seq(path)) { c =>
+          c.append(rows(c.frame), path, partitionBy = Seq("cell"))
         }: Unit
     }
   }

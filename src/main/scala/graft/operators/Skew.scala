@@ -270,11 +270,10 @@ object Skew {
           .write.mode(org.apache.spark.sql.SaveMode.Append)
           .parquet(s"$path/sketches")
       case Some(tag) =>
-        val sig = graft.pipeline.BatchAppend.contentSig(df, Seq(keyCol))
-        graft.pipeline.BatchAppend.exactlyOnce(df.sparkSession, path, tag,
-          sig, Seq(s"$path/sketches")) {
-          graft.pipeline.BatchAppend.appendBatchFiles(
-            cmsSketchRow(df, keyCol, eps, conf, seed), s"$path/sketches", tag)
+        graft.pipeline.BatchAppend.exactlyOnce(path, tag, df, Seq(keyCol),
+          Seq(s"$path/sketches")) { c =>
+          c.append(cmsSketchRow(c.frame, keyCol, eps, conf, seed),
+            s"$path/sketches")
         }: Unit
     }
   }

@@ -765,12 +765,11 @@ object TextAnalysis {
       case None => bm25IndexBatch(docs, idCol, textCol, path, nBuckets,
         org.apache.spark.sql.SaveMode.Append)
       case Some(tag) =>
-        val sig = graft.pipeline.BatchAppend.contentSig(docs,
-          Seq(idCol, textCol))
-        graft.pipeline.BatchAppend.exactlyOnce(spark, path, tag, sig,
-          Seq(s"$path/postings", s"$path/terms", s"$path/stats")) {
-          bm25IndexBatch(docs, idCol, textCol, path, nBuckets,
-            org.apache.spark.sql.SaveMode.Append, batchTag = Some(tag))
+        graft.pipeline.BatchAppend.exactlyOnce(path, tag, docs,
+          Seq(idCol, textCol),
+          Seq(s"$path/postings", s"$path/terms", s"$path/stats")) { c =>
+          bm25IndexBatch(c.frame, idCol, textCol, path, nBuckets,
+            org.apache.spark.sql.SaveMode.Append, commit = Some(c))
         }: Unit
     }
   }
@@ -778,14 +777,12 @@ object TextAnalysis {
   private def bm25IndexBatch(docs: DataFrame, idCol: String, textCol: String,
                              path: String, nBuckets: Int,
                              mode: org.apache.spark.sql.SaveMode,
-                             batchTag: Option[String] = None): Unit = {
+                             commit: Option[graft.pipeline.BatchAppend.Commit] = None): Unit = {
     val spark = docs.sparkSession
     val bucket = pmod(xxhash64(col("term")), lit(nBuckets.toLong)).cast("int")
     def write(df: DataFrame, sub: String, parts: Seq[String]): Unit =
-      batchTag match {
-        case Some(tag) =>
-          graft.pipeline.BatchAppend.appendBatchFiles(df, s"$path/$sub",
-            tag, parts)
+      commit match {
+        case Some(c) => c.append(df, s"$path/$sub", parts)
         case None =>
           val w = df.write.mode(mode)
           (if (parts.nonEmpty) w.partitionBy(parts: _*) else w)
@@ -861,16 +858,14 @@ object TextAnalysis {
         graft.pipeline.Tombstones.delete(doomed, "id", path)
       case Some(tag0) =>
         val tag = s"del-$tag0"
-        val sig = graft.pipeline.BatchAppend.contentSig(ids, Seq(idCol))
-        graft.pipeline.BatchAppend.exactlyOnce(spark, path, tag, sig,
-          Seq(graft.pipeline.Tombstones.tombstonePath(path),
-            termsDir, statsDir)) {
-          graft.pipeline.BatchAppend.appendBatchFiles(deadTerms, termsDir,
-            tag, Seq("bucket"))
-          graft.pipeline.BatchAppend.appendBatchFiles(deadStats, statsDir,
-            tag)
-          graft.pipeline.BatchAppend.appendBatchFiles(doomed,
-            graft.pipeline.Tombstones.tombstonePath(path), tag)
+        // the rows join and group the ids, so the signature is computed
+        // by its own job
+        val tombs = graft.pipeline.Tombstones.tombstonePath(path)
+        graft.pipeline.BatchAppend.exactlyOnce(path, tag, ids, Seq(idCol),
+          Seq(tombs, termsDir, statsDir)) { c =>
+          c.append(deadTerms, termsDir, Seq("bucket"))
+          c.append(deadStats, statsDir)
+          c.append(doomed, tombs)
         }: Unit
     }
   }

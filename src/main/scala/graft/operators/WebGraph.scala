@@ -901,12 +901,9 @@ object WebGraph {
     batchTag match {
       case None => rows.write.mode("append").parquet(s"$path/edges")
       case Some(tag) =>
-        val sig = graft.pipeline.BatchAppend.contentSig(rows,
-          Seq("src_host", "dst_host", "weight"))
-        graft.pipeline.BatchAppend.exactlyOnce(edges.sparkSession, path,
-          tag, sig, Seq(s"$path/edges")) {
-          graft.pipeline.BatchAppend.appendBatchFiles(rows,
-            s"$path/edges", tag)
+        graft.pipeline.BatchAppend.exactlyOnce(path, tag, rows,
+          Seq("src_host", "dst_host", "weight"), Seq(s"$path/edges")) { c =>
+          c.append(c.frame, s"$path/edges")
         }: Unit
     }
   }

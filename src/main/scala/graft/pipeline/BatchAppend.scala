@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Exactly-once appends for the ADDITIVE index families (r17, VERDICT r16
@@ -20,12 +20,21 @@ import org.apache.spark.sql.functions._
   *     lineage error (a stream restarted from a lost/reset checkpoint
   *     renumbers batch ids over old sink dirs; silently skipping would
   *     DROP the new data, silently appending would double the old).
-  *   - no marker → delete any `batch-<tag>-*` data files (a crashed
+  *   - no marker → delete any `batch-<tag>-<k>.*` data files (a crashed
   *     attempt's partial commit — removing them FIRST also restores the
   *     exact pre-batch state the recomputation must read), re-run the
   *     append writing files NAMED `batch-<tag>-<k>`, then create the
   *     marker LAST. Every crash point therefore replays to exactly one
   *     committed copy.
+  *
+  * Markers and data files are matched by their whole name: a marker is
+  * `<tag>-<sig>` with the signature's fixed shape `-?\d+_\d+`, and a data
+  * file is `batch-<tag>-<k>.<ext>`, so one tag that is another plus `-…`
+  * (`crawl` and `crawl-2`) never reads or clears the other's state.
+  *
+  * On a first commit the signature is observed in the write's own pass
+  * ([[exactlyOnce]]), so a batch costs the one job that writes it; a
+  * committed replay costs the marker listing and one signature job.
   *
   * Data files are committed by per-file rename out of a dot-prefixed
   * staging directory (invisible to readers), so a reader never sees a
@@ -48,30 +57,67 @@ object BatchAppend {
     * foreachBatch replay re-delivers byte-identical content (same source
     * offsets), so the signature matches; a reset-lineage stream's
     * colliding batch id carries different content and mismatches.
+    *
+    * `weightCol`, when given, names a column of row multiplicities: each
+    * row counts that many times, so a frame grouped by `cols` with its
+    * group sizes in `weightCol` has the signature of its ungrouped rows.
+    *
+    * The sums are observed (`Dataset.observe`) on a pass that discards
+    * the rows: one Spark job, plus whatever exchanges `df` itself plans —
+    * the same observation [[exactlyOnce]] takes from a write's own pass.
     */
-  def contentSig(df: DataFrame, cols: Seq[String]): String = {
-    val r = df.agg(
-      sum(xxhash64(concat_ws("\u0000", cols.map(c => col(c).cast("string")): _*))
-        .cast("decimal(38,0)")).as("s"),
-      count(lit(1)).as("n")).head()
-    val s = if (r.isNullAt(0)) "0" else r.getDecimal(0).toBigInteger.toString
-    s"${s}_${r.getLong(1)}"
+  def contentSig(df: DataFrame, cols: Seq[String],
+                 weightCol: Option[String] = None): String = {
+    val (s, n) = sigColumns(cols, weightCol)
+    val obs = Observation()
+    df.observe(obs, s, n).write.format("noop").mode("overwrite").save()
+    observedSig(obs).getOrElse(throw new IllegalStateException(
+      s"contentSig: the signature observed on $cols did not arrive within $ObservedSigWait"))
   }
+
+  /** The signature's two aggregates, `s` and `n`. */
+  private def sigColumns(cols: Seq[String],
+                         weightCol: Option[String]): (Column, Column) = {
+    val h = xxhash64(concat_ws("\u0000", cols.map(c => col(c).cast("string")): _*))
+      .cast("decimal(38,0)")
+    weightCol match {
+      case None => (sum(h).as("s"), count(lit(1)).as("n"))
+      case Some(w) => (sum(h * col(w).cast("decimal(38,0)")).as("s"),
+        coalesce(sum(col(w).cast("long")), lit(0L)).as("n"))
+    }
+  }
+
+  /** How long an observed signature is waited for once its action has
+    * returned (observations are delivered on the listener bus).
+    */
+  private val ObservedSigWait = scala.concurrent.duration.Duration(60, "s")
+
+  private def observedSig(obs: Observation): Option[String] =
+    try {
+      val r = scala.concurrent.Await.result(obs.future, ObservedSigWait)
+      val s = r.get(0) match {
+        case null => "0"
+        case d: java.math.BigDecimal => d.toBigInteger.toString
+      }
+      Some(s"${s}_${r.getLong(1)}")
+    } catch { case _: java.util.concurrent.TimeoutException => None }
 
   private def fsOf(spark: SparkSession, p: Path) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private def markerDir(indexRoot: String) = new Path(s"$indexRoot/_committed")
 
-  /** The committed signature for `tag`, if any. */
-  def committedSig(spark: SparkSession, indexRoot: String,
-                   tag: String): Option[String] = {
+  /** The committed signature for `tag`, if any: the marker named
+    * `<tag>-<sig>` whose remainder after `<tag>-` has the signature's shape.
+    */
+  private def committedSig(spark: SparkSession, indexRoot: String,
+                           tag: String): Option[String] = {
     val dir = markerDir(indexRoot)
     val fs = fsOf(spark, dir)
+    val marker = (java.util.regex.Pattern.quote(tag) + "-(-?\\d+_\\d+)").r
     if (!fs.exists(dir)) None
     else fs.listStatus(dir).map(_.getPath.getName)
-      .collectFirst { case n if n.startsWith(s"$tag-") =>
-        n.stripPrefix(s"$tag-") }
+      .collectFirst { case marker(sig) => sig }
   }
 
   private def writeMarker(spark: SparkSession, indexRoot: String,
@@ -80,9 +126,9 @@ object BatchAppend {
     fsOf(spark, p).create(p, true).close()
   }
 
-  /** Delete every `batch-<tag>-*` data file under `dir` — recursing one
-    * partition level (`key=value` subdirs, for bucketed indexes like the
-    * BM25 postings) — plus local-FS `.crc` twins and any stale staging
+  /** Delete every `batch-<tag>-<k>.*` data file under `dir` — recursing
+    * one partition level (`key=value` subdirs, for bucketed indexes like
+    * the BM25 postings) — plus local-FS `.crc` twins and any stale staging
     * dir: a crashed attempt's partial commit. No-op when the directory
     * doesn't exist.
     */
@@ -90,11 +136,11 @@ object BatchAppend {
                               tag: String): Unit = {
     val root = new Path(dir)
     val fs = fsOf(spark, root)
+    val batchFile = ("\\.?batch-" + java.util.regex.Pattern.quote(tag) + "-\\d+\\..*").r
     def clear(p: Path): Unit =
       if (fs.exists(p)) fs.listStatus(p).foreach { st =>
         val n = st.getPath.getName
-        if (st.isFile &&
-            (n.startsWith(s"batch-$tag-") || n.startsWith(s".batch-$tag-")))
+        if (st.isFile && batchFile.matches(n))
           fs.delete(st.getPath, false): Unit
         else if (st.isDirectory && n == s".batch-$tag-staging")
           fs.delete(st.getPath, true): Unit
@@ -109,11 +155,11 @@ object BatchAppend {
     * part file (and its local-FS checksum twin) to its deterministic
     * committed name — for partitioned appends (`partitionBy` non-empty),
     * each `key=value` subdir's files land in the matching subdir of
-    * `dir`. Rename is the commit for each file; the caller's marker is
-    * the commit for the batch.
+    * `dir`. Rename is the commit for each file; the marker is the commit
+    * for the batch.
     */
-  def appendBatchFiles(rows: DataFrame, dir: String, tag: String,
-                       partitionBy: Seq[String] = Nil): Unit = {
+  private def appendBatchFiles(rows: DataFrame, dir: String, tag: String,
+                               partitionBy: Seq[String]): Unit = {
     val spark = rows.sparkSession
     val staging = s"$dir/.batch-$tag-staging"
     val stagingP = new Path(staging)
@@ -177,26 +223,111 @@ object BatchAppend {
     }
   }
 
-  /** Run `write` exactly once for (`tag`, `sig`): no-op on a committed
-    * replay, loud error on a lineage mismatch, otherwise clear the
-    * attempt's partials from `dataDirs`, run `write` (which must append
-    * via [[appendBatchFiles]] into those dirs), and commit the marker.
-    * Returns whether the write ran (false = replay no-op).
+  /** The batch being committed, as [[exactlyOnce]]'s `write` sees it:
+    * build the rows to append from `frame` and append them with [[append]].
     */
-  def exactlyOnce(spark: SparkSession, indexRoot: String, tag: String,
-                  sig: String, dataDirs: Seq[String])(write: => Unit): Boolean =
+  final class Commit private[BatchAppend] (val frame: DataFrame,
+      batch: DataFrame, obs: Observation, sigCols: Seq[Column],
+      tag: String, dataDirs: Seq[String]) {
+    private[BatchAppend] var observed = false
+    private[BatchAppend] var observable = true
+
+    /** Append `rows` under `dir` ([[appendBatchFiles]]); `dir` must be one
+      * of the commit's data directories. The first append whose plan holds
+      * `frame`'s signature with no exchange or subquery between it and the
+      * write observes the signature in its own pass; an append that holds
+      * it otherwise leaves the signature to a job of its own.
+      */
+    def append(rows: DataFrame, dir: String, partitionBy: Seq[String] = Nil): Unit = {
+      require(dataDirs.contains(dir),
+        s"BatchAppend: $dir is not among the data directories $dataDirs")
+      signaturePaths(rows) match {
+        case Nil =>
+        case Seq(true) if observable =>
+          if (!observed) {
+            // Registered only now, so that no earlier action of the caller
+            // on `frame` can complete it: the next action holding it is
+            // this write. An observation is keyed by its name and the id of
+            // the frame observed, which `frame`'s node shares.
+            batch.observe(obs, sigCols.head, sigCols.tail: _*)
+            observed = true
+          }
+        case _ => observable = false
+      }
+      appendBatchFiles(rows, dir, tag, partitionBy)
+    }
+
+    /** For each node observing the signature in `rows`' physical plan:
+      * whether nothing between it and the root starts a separate stage
+      * (an exchange, a query stage or a subquery). Only a result task's
+      * metrics are merged once per partition; a re-run shuffle-map task's
+      * may be merged twice.
+      */
+    private def signaturePaths(rows: DataFrame): Seq[Boolean] = {
+      import org.apache.spark.sql.execution.{CollectMetricsExec, SparkPlan}
+      import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+      import org.apache.spark.sql.execution.exchange.Exchange
+      def paths(p: SparkPlan, clean: Boolean): Seq[Boolean] = {
+        val here = p match {
+          case c: CollectMetricsExec if c.name == obs.name => Seq(clean)
+          case _ => Nil
+        }
+        val below = p match {
+          case a: AdaptiveSparkPlanExec => paths(a.initialPlan, clean)
+          case q: QueryStageExec => paths(q.plan, clean = false)
+          case _: Exchange => p.children.flatMap(paths(_, clean = false))
+          case _ => p.children.flatMap(paths(_, clean))
+        }
+        here ++ below ++ p.subqueries.flatMap(paths(_, clean = false))
+      }
+      paths(rows.queryExecution.executedPlan, clean = true)
+    }
+  }
+
+  /** Append a batch to the index at `indexRoot` exactly once under `tag`.
+    *
+    * The batch's signature ([[contentSig]] of `batch` over `sigCols`,
+    * rows weighted by `weightCol` when given) decides:
+    *   - a marker for `tag` with the same signature → no-op (a replay);
+    *   - a marker with another signature → loud lineage error;
+    *   - no marker → clear the attempt's partials from `dataDirs`, run
+    *     `write`, which builds its rows from [[Commit.frame]] and appends
+    *     them with [[Commit.append]] into those dirs, and commit the marker.
+    *
+    * A present marker costs one signature job. A first commit observes the
+    * signature in the pass that writes the rows when they are a narrow map
+    * of `batch` (`Dataset.observe`, the same expressions as [[contentSig]]):
+    * the batch costs only its writes. Otherwise — rows grouped or joined
+    * above the batch, read from a cache, or built from another frame — the
+    * signature is computed by a job before the marker. `write` must not
+    * depend on the value of the signature. Returns whether the write ran
+    * (false = replay no-op).
+    */
+  def exactlyOnce(indexRoot: String, tag: String, batch: DataFrame,
+                  sigCols: Seq[String], dataDirs: Seq[String],
+                  weightCol: Option[String] = None)(write: Commit => Unit): Boolean = {
+    val spark = batch.sparkSession
     committedSig(spark, indexRoot, tag) match {
-      case Some(prev) if prev == sig => false
-      case Some(prev) => throw new IllegalStateException(
-        s"batch '$tag' is already committed at $indexRoot with DIFFERENT " +
-          s"content (marker $prev != batch $sig) — this looks like a stream " +
-          "restarted from a lost/reset checkpoint re-using batch ids over " +
-          "an existing index. Point the new lineage at a fresh index (or " +
-          "repair _committed) instead of silently double-counting")
+      case Some(prev) =>
+        val sig = contentSig(batch, sigCols, weightCol)
+        if (prev == sig) false
+        else throw new IllegalStateException(
+          s"batch '$tag' is already committed at $indexRoot with DIFFERENT " +
+            s"content (marker $prev != batch $sig) — this looks like a stream " +
+            "restarted from a lost/reset checkpoint re-using batch ids over " +
+            "an existing index. Point the new lineage at a fresh index (or " +
+            "repair _committed) instead of silently double-counting")
       case None =>
         dataDirs.foreach(d => clearBatchFiles(spark, d, tag))
-        write
+        val (s, n) = sigColumns(sigCols, weightCol)
+        val obs = Observation()
+        val commit = new Commit(batch.observe(obs.name, s, n), batch, obs,
+          Seq(s, n), tag, dataDirs)
+        write(commit)
+        val sig = Some(obs).filter(_ => commit.observed && commit.observable)
+          .flatMap(observedSig).getOrElse(contentSig(batch, sigCols, weightCol))
         writeMarker(spark, indexRoot, tag, sig)
         true
     }
+  }
 }

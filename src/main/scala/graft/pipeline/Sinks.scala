@@ -369,7 +369,7 @@ object Sinks {
     }
     val collapsed = partCols.filter(collapse)
     val df = collapsed
-      .foldLeft(spark.read.parquet(path)) { (d, c) =>
+      .foldLeft(readParquet(spark, path)) { (d, c) =>
         d.withColumn(c, org.apache.spark.sql.functions.lit(-1L))
       }
       .repartition(parts)
@@ -394,7 +394,7 @@ object Sinks {
                       sumCols: Seq[String],
                       partitionCols: Seq[String] = Nil): Long = {
     import org.apache.spark.sql.functions.{col, sum}
-    val input = spark.read.parquet(path)
+    val input = readParquet(spark, path)
     // Coverage must be TOTAL: any column not named here would be
     // silently dropped by the group-and-swap, and the staged overwrite
     // replaces the only copy — an index that grows a column must fail
@@ -476,40 +476,65 @@ object Sinks {
     * starting with `.`, or with `_` unless it contains `=`, is metadata —
     * so `_SUCCESS`, `_manifest-*`, sidecars and `.crc` files are skipped
     * and `__kb=<n>` partition directories are descended — applied to
-    * every path component under `path`.
+    * every path component under `path`. The walk lists one directory at a
+    * time (`listStatus`): `listFiles`' located statuses load each file's
+    * permissions, which the local file system does by running `ls` once
+    * per file when Hadoop's native library is absent.
     */
   private def parquetDataFiles(spark: SparkSession, path: String): Option[Seq[Path]] = {
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) return None
     if (fs.getFileStatus(root).isFile) return Some(Seq(fs.makeQualified(root)))
-    val rootStr = Path.getPathWithoutSchemeAndAuthority(root).toString
     def isDataName(n: String): Boolean =
       !n.startsWith(".") && (!n.startsWith("_") || n.contains("="))
-    def isDataFile(p: Path): Boolean = {
-      // every component below the root must pass the data-name rule
-      val rel = Path.getPathWithoutSchemeAndAuthority(p).toString
-        .stripPrefix(rootStr).stripPrefix("/")
-      rel.nonEmpty && rel.split('/').forall(isDataName)
-    }
-    val it = fs.listFiles(root, true)
-    val b = Seq.newBuilder[Path]
-    while (it.hasNext) { val s = it.next(); if (isDataFile(s.getPath)) b += s.getPath }
-    Some(b.result().sortBy(_.toString)).filter(_.nonEmpty)
+    def walk(dir: Path): Seq[Path] =
+      fs.listStatus(dir).toSeq.filter(st => isDataName(st.getPath.getName)).flatMap { st =>
+        if (st.isDirectory) walk(st.getPath) else Seq(st.getPath)
+      }
+    Some(walk(root).sortBy(_.toString)).filter(_.nonEmpty)
   }
 
-  /** `f` of each of `files`' footers, in order, read one file at a time on
-    * the driver; only `f`'s result outlives the read. A file that does not
+  /** `f` of a reader over each of `files`, in order, opened one at a time
+    * on the driver; only `f`'s result outlives the reader. The read options
+    * are built once from the session's Hadoop configuration (opening with
+    * none parses a fresh `Configuration` per file). A file that does not
     * parse as parquet throws.
     */
-  private def parquetFooters[T](spark: SparkSession, files: Seq[Path])(
-      f: org.apache.parquet.hadoop.metadata.ParquetMetadata => T): Seq[T] = {
+  private def withParquetReaders[T](spark: SparkSession, files: Seq[Path])(
+      f: org.apache.parquet.hadoop.ParquetFileReader => T): Seq[T] = {
     val conf = spark.sparkContext.hadoopConfiguration
+    val options = org.apache.parquet.HadoopReadOptions.builder(conf).build()
     files.map { p =>
       val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
-      try f(reader.getFooter) finally reader.close()
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf), options)
+      try f(reader) finally reader.close()
     }
+  }
+
+  /** `f` of each of `files`' footers ([[withParquetReaders]]). */
+  private def parquetFooters[T](spark: SparkSession, files: Seq[Path])(
+      f: org.apache.parquet.hadoop.metadata.ParquetMetadata => T): Seq[T] =
+    withParquetReaders(spark, files)(r => f(r.getFooter))
+
+  /** Every row of the parquet data files under `path` ([[parquetDataFiles]]),
+    * read on the driver with no Spark job, as parquet `Group`s: for
+    * one-row sidecars such as an index's parameters. A path holding no
+    * data file throws `FileNotFoundException`; a file that does not parse
+    * as parquet throws.
+    */
+  def driverRows(spark: SparkSession, path: String): Seq[org.apache.parquet.example.data.Group] = {
+    val files = parquetDataFiles(spark, path).getOrElse(
+      throw new java.io.FileNotFoundException(s"no parquet data file under $path"))
+    withParquetReaders(spark, files) { r =>
+      val schema = r.getFooter.getFileMetaData.getSchema
+      val io = new org.apache.parquet.io.ColumnIOFactory().getColumnIO(schema)
+      Iterator.continually(r.readNextRowGroup()).takeWhile(_ != null).flatMap { pages =>
+        val rows = io.getRecordReader(pages,
+          new org.apache.parquet.example.data.simple.convert.GroupRecordConverter(schema))
+        Iterator.fill(pages.getRowCount.toInt)(rows.read())
+      }.toVector
+    }.flatten
   }
 
   /** S1b: delimited-text scan — the reference's true ingest format

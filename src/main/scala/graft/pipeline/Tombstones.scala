@@ -38,34 +38,37 @@ object Tombstones {
   def tombstonePath(indexRoot: String): String = s"$indexRoot/_tombstones"
 
   /** Append a batch of doomed ids (distinct-ed; the column is stored as
-    * `id` whatever its source name). `batchTag` = exactly-once.
+    * `id` whatever its source name). `batchTag` = exactly-once: the ids
+    * are counted per id once, and the batch's signature is observed after
+    * that aggregate in the write's own pass (the sum over the groups of
+    * count × hash equals the per-row sum), so a first tagged delete is one
+    * write; the NULL group counts in the signature and is not written.
     */
   def delete(ids: DataFrame, idCol: String, indexRoot: String,
              batchTag: Option[String] = None): Unit = {
-    val spark = ids.sparkSession
-    val rows = ids.select(col(idCol).as("id")).filter(col("id").isNotNull)
-      .distinct()
+    val path = tombstonePath(indexRoot)
     batchTag match {
       case None =>
-        rows.write.mode(org.apache.spark.sql.SaveMode.Append)
-          .parquet(tombstonePath(indexRoot))
+        ids.select(col(idCol).as("id")).filter(col("id").isNotNull).distinct()
+          .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(path)
       case Some(tag0) =>
         val tag = s"del-$tag0"
-        val sig = BatchAppend.contentSig(ids, Seq(idCol))
-        BatchAppend.exactlyOnce(spark, indexRoot, tag, sig,
-          Seq(tombstonePath(indexRoot))) {
-          BatchAppend.appendBatchFiles(rows, tombstonePath(indexRoot), tag)
+        val perId = ids.select(col(idCol).as("id")).groupBy("id")
+          .agg(count(lit(1)).as("n"))
+        BatchAppend.exactlyOnce(indexRoot, tag, perId, Seq("id"), Seq(path),
+          weightCol = Some("n")) { c =>
+          c.append(c.frame.filter(col("id").isNotNull).select("id"), path)
         }: Unit
     }
   }
 
   /** The current tombstone set, or None when none have ever been
     * written (the overwhelmingly common case — callers skip the join
-    * entirely).
+    * entirely). The schema comes from a footer ([[Sinks.readParquet]]).
     */
   def tombstones(spark: SparkSession, indexRoot: String): Option[DataFrame] = {
     val p = tombstonePath(indexRoot)
-    if (Sinks.exists(spark, p)) Some(spark.read.parquet(p).select("id"))
+    if (Sinks.exists(spark, p)) Some(Sinks.readParquet(spark, p).select("id"))
     else None
   }
 
@@ -74,12 +77,11 @@ object Tombstones {
     */
   def exclude(df: DataFrame, indexRoot: String,
               idCol: String = "id"): DataFrame =
-    tombstones(df.sparkSession, indexRoot) match {
-      case None => df
-      case Some(t) =>
-        df.join(t.withColumnRenamed("id", "__tomb_id"),
-          df(idCol) === col("__tomb_id"), "left_anti")
-    }
+    tombstones(df.sparkSession, indexRoot).fold(df)(excludeIds(df, _, idCol))
+
+  private def excludeIds(df: DataFrame, tombs: DataFrame, idCol: String): DataFrame =
+    df.join(tombs.withColumnRenamed("id", "__tomb_id"),
+      df(idCol) === col("__tomb_id"), "left_anti")
 
   /** Copy every `_`-prefixed sidecar directory from `fromRoot` into
     * `stagedRoot`, except `_tombstones` (the purge consumes them) and
@@ -106,8 +108,10 @@ object Tombstones {
   /** Physically remove tombstoned rows: staged-swap rewrite of the data
     * rows minus the tombstone set, sidecars and exactly-once markers
     * carried forward, tombstones cleared by the swap itself (the new
-    * root simply has none). Returns the number of rows REMOVED; no
-    * tombstones → no-op returning 0 (the index is untouched).
+    * root simply has none). Returns the number of rows REMOVED — the
+    * footers' row counts before the swap minus the rows written, so no
+    * count job; no tombstones → no-op returning 0 (the index is
+    * untouched).
     *
     * `partitionCols` must name the index's partition layout (e.g.
     * `cell` for the IVF-shaped families) so the rewritten index keeps
@@ -118,10 +122,9 @@ object Tombstones {
             partitionCols: Seq[String] = Nil): Long =
     tombstones(spark, indexRoot) match {
       case None => 0L
-      case Some(_) =>
-        val before = spark.read.parquet(indexRoot)
-        val kept = exclude(before, indexRoot, idCol)
-        val nBefore = before.count()
+      case Some(tombs) =>
+        val kept = excludeIds(Sinks.readParquet(spark, indexRoot), tombs, idCol)
+        val nBefore = Sinks.countVerify(spark, indexRoot)
         val nKept = Sinks.overwriteViaStagingWith(kept, indexRoot,
           partitionCols) { staged =>
           copySidecars(spark, indexRoot, staged)

@@ -12,6 +12,13 @@ elapsed seconds (the union of the execution intervals) and the overlap
 (summed wall / elapsed: 1.0 when no two executions overlap).
 
     python3 tools/stage_profile.py LOG [--sort task_s] [--limit N]
+    python3 tools/stage_profile.py LOG --by group
+
+`--by group` rolls the jobs up by Spark job group (`spark.jobGroup.id`;
+perfbench sets one per traced layer, traced or not) instead: jobs, jobs
+outside any SQL execution (mostly parquet schema inference), task seconds
+and elapsed seconds (the union of the group's job intervals). Jobs with no
+group are grouped under "-".
 
 LOG is an uncompressed event log: a file, a rolling-log directory
 (`eventlog_v2_<app>`, its `events_<n>_<app>` parts read in order), or a
@@ -94,6 +101,77 @@ def profile(lines):
     return list(execs.values())
 
 
+def by_group(lines):
+    """One row per job group: jobs, jobs outside SQL executions, task
+    seconds and elapsed seconds.
+
+    >>> ev = [
+    ...   {"Event": "SparkListenerJobStart", "Job ID": 0, "Submission Time": 1000,
+    ...    "Properties": {"spark.jobGroup.id": "index.probe"}},
+    ...   {"Event": "SparkListenerStageSubmitted", "Stage Info": {"Stage ID": 0},
+    ...    "Properties": {"spark.jobGroup.id": "index.probe"}},
+    ...   {"Event": "SparkListenerTaskEnd", "Stage ID": 0,
+    ...    "Task Metrics": {"Executor Run Time": 250}},
+    ...   {"Event": "SparkListenerJobEnd", "Job ID": 0, "Completion Time": 1500},
+    ...   {"Event": "SparkListenerJobStart", "Job ID": 1, "Submission Time": 1400,
+    ...    "Properties": {"spark.jobGroup.id": "index.probe",
+    ...                   "spark.sql.execution.id": "7"}},
+    ...   {"Event": "SparkListenerJobEnd", "Job ID": 1, "Completion Time": 2000},
+    ...   {"Event": "SparkListenerJobStart", "Job ID": 2, "Submission Time": 2500},
+    ...   {"Event": "SparkListenerJobEnd", "Job ID": 2, "Completion Time": 2600}]
+    >>> for r in by_group(json.dumps(e) for e in ev):
+    ...     print(r["group"], r["jobs"], r["outside_sql"], r["task_s"], r["elapsed_s"])
+    index.probe 2 1 0.25 1.0
+    - 1 1 0.0 0.1
+    """
+    groups = {}  # group -> row
+    job_group, stage_group, spans = {}, {}, {}
+
+    def row(g):
+        return groups.setdefault(g, {"group": g, "jobs": 0, "outside_sql": 0,
+                                     "task_s": 0.0, "elapsed_s": 0.0})
+
+    for line in lines:
+        ev = json.loads(line)
+        kind = ev.get("Event", "")
+        props = ev.get("Properties") or {}
+        if kind == "SparkListenerJobStart":
+            g = props.get("spark.jobGroup.id") or NONE
+            job_group[ev["Job ID"]] = g
+            r = row(g)
+            r["jobs"] += 1
+            r["outside_sql"] += exec_id(props) == NONE
+            spans.setdefault(g, {})[ev["Job ID"]] = [ev.get("Submission Time"), None]
+        elif kind == "SparkListenerJobEnd":
+            g = job_group.get(ev["Job ID"])
+            if g is not None:
+                spans[g][ev["Job ID"]][1] = ev.get("Completion Time")
+        elif kind == "SparkListenerStageSubmitted":
+            stage_group[ev["Stage Info"]["Stage ID"]] = props.get("spark.jobGroup.id") or NONE
+        elif kind == "SparkListenerTaskEnd":
+            m = ev.get("Task Metrics") or {}
+            row(stage_group.get(ev["Stage ID"], NONE))["task_s"] += \
+                m.get("Executor Run Time", 0) / 1000.0
+    for g, r in groups.items():
+        r["elapsed_s"] = union_seconds([(lo, hi) for lo, hi in spans.get(g, {}).values()
+                                        if lo is not None and hi is not None])
+    return list(groups.values())
+
+
+def print_groups(rows, sort):
+    key = {"id": "group", "wall_s": "elapsed_s"}.get(sort, sort)
+    rows.sort(key=lambda r: (r["group"] == NONE, r["group"]) if key == "group"
+              else -r.get(key, 0))
+    fmt = "{:<32} {:>5} {:>11} {:>8} {:>9}"
+    print(fmt.format("group", "jobs", "outside_sql", "task_s", "elapsed_s"))
+    for r in rows:
+        print(fmt.format(r["group"][:32], r["jobs"], r["outside_sql"],
+                         f"{r['task_s']:.2f}", f"{r['elapsed_s']:.2f}"))
+    print(fmt.format("total", sum(r["jobs"] for r in rows),
+                     sum(r["outside_sql"] for r in rows),
+                     f"{sum(r['task_s'] for r in rows):.2f}", ""))
+
+
 def union_seconds(intervals):
     """Seconds covered by the union of (start ms, end ms) intervals.
 
@@ -121,7 +199,12 @@ def main():
                              "task_s", "shuffle_read", "shuffle_write"])
     ap.add_argument("--limit", type=int, default=0,
                     help="print only the first N rows after sorting")
+    ap.add_argument("--by", default="execution", choices=["execution", "group"],
+                    help="one row per SQL execution (default) or per job group")
     a = ap.parse_args()
+    if a.by == "group":
+        print_groups(by_group(lines(log_files(a.log))), a.sort)
+        return
     rows = profile(lines(log_files(a.log)))
     for r in rows:
         done = r["start"] is not None and r["end"] is not None
