@@ -55,6 +55,27 @@ object RowHash {
     */
   def orderedDenseId(df: DataFrame, sortCols: Seq[Column],
                      idCol: String): DataFrame =
+    mintOrdered(df, sortCols, idCol, Nil).df
+
+  /** An [[orderedDenseIdByKeys]] result: the id-tagged frame, its row
+    * count, and whether two rows share a key.
+    */
+  final case class KeyedIds(df: DataFrame, rows: Long, keysRepeat: Boolean)
+
+  /** [[orderedDenseId]] in `keys` order that also reports, from the same
+    * count job, the row count and whether any key occurs twice. Keys are
+    * compared null-safe under the sort's ordering — the equality `groupBy`
+    * uses (NULLs equal, NaN equal, -0.0 equal to 0.0) — and after the range
+    * partition and sort equal keys sit next to each other in one partition,
+    * so comparing adjacent rows finds every repeat. When keys repeat the
+    * ids among the tied rows are arbitrary.
+    */
+  def orderedDenseIdByKeys(df: DataFrame, keys: Seq[String],
+                           idCol: String): KeyedIds =
+    mintOrdered(df, keys.map(col), idCol, keys)
+
+  private def mintOrdered(df: DataFrame, sortCols: Seq[Column], idCol: String,
+                          tieKeys: Seq[String]): KeyedIds =
     denseIdByPartitionOffset(
       df.repartitionByRange(sortCols: _*).sortWithinPartitions(sortCols: _*)
         // Local checkpoint — load-bearing, NOT an optimization. The mint
@@ -72,7 +93,7 @@ object RowHash {
         // everything downstream inside whole-stage codegen) and no job is
         // spent filling it beforehand.
         .localCheckpoint(false),
-      idCol, 0L)
+      idCol, 0L, tieKeys)
 
   /** Mint dense `offset+1..offset+n` ids in partition-major row order
     * WITHOUT leaving columnar execution: the same two passes RDD
@@ -83,7 +104,9 @@ object RowHash {
     * `spark_partition_id()`, and the intra-partition row index is
     * `monotonically_increasing_id()`'s low 33 bits (its documented layout:
     * partitionId << 33 | rowIndexInPartition, assigned in row-production
-    * order — here the post-sort order).
+    * order — here the post-sort order). The count job also reports whether
+    * two adjacent rows of a partition are equal on `tieKeys` (never, when
+    * there are none).
     *
     * PRECONDITION (why this is private): both passes run as separate
     * actions, so the input's row->partition assignment must be identical
@@ -93,39 +116,69 @@ object RowHash {
     * zipWithIndex freezes ONE physical plan for both of its jobs.
     */
   private def denseIdByPartitionOffset(df: DataFrame, idCol: String,
-                                       offset0: Long): DataFrame = {
-    val counts = partitionRowCounts(df)
+                                       offset0: Long, tieKeys: Seq[String]): KeyedIds = {
+    val counts = partitionRowCounts(df, tieKeys)
     // The low-33-bit mask wraps silently if a single partition holds >= 2^33
     // rows; fail loudly instead of minting duplicate ids. (At 2^33 rows a
     // partition is already far past any sane partition sizing.)
-    counts.find(_._2 >= (1L << 33)).foreach { case (pid, n) =>
+    counts.find(_._2 >= (1L << 33)).foreach { case (pid, n, _) =>
       throw new IllegalStateException(
         s"denseIdByPartitionOffset: partition $pid holds $n rows >= 2^33; " +
           "repartition the input before minting ids")
     }
     var acc = offset0
     val offsets = counts.filter(_._2 > 0)
-      .map { case (pid, n) => val o = acc; acc += n; pid -> o }
+      .map { case (pid, n, _) => val o = acc; acc += n; pid -> o }
     val offsetCol =
       if (offsets.isEmpty) lit(offset0) // empty input: no rows to look up
       else element_at(
         map_from_arrays(array(offsets.map(p => lit(p._1)).toIndexedSeq: _*),
           array(offsets.map(p => lit(p._2)).toIndexedSeq: _*)),
         spark_partition_id())
-    df.withColumn(idCol, (monotonically_increasing_id()
-        .bitwiseAND(lit((1L << 33) - 1)) + offsetCol + lit(1L)).cast(LongType))
+    KeyedIds(
+      df.withColumn(idCol, (monotonically_increasing_id()
+        .bitwiseAND(lit((1L << 33) - 1)) + offsetCol + lit(1L)).cast(LongType)),
+      acc - offset0, counts.exists(_._3))
   }
 
   /** Rows per physical partition of `df`, in partition order, from ONE job
     * over its executed RDD — the partition index is the one
-    * `spark_partition_id()` reports over the same frame.
+    * `spark_partition_id()` reports over the same frame — each with
+    * whether two adjacent rows of the partition are equal on `tieKeys`
+    * under their ascending sort ordering.
     */
-  private def partitionRowCounts(df: DataFrame): Array[(Int, Long)] =
+  private def partitionRowCounts(df: DataFrame,
+                                 tieKeys: Seq[String]): Array[(Int, Long, Boolean)] = {
+    import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference,
+      InterpretedOrdering, SortOrder, UnsafeProjection}
+    val resolver = df.sparkSession.sessionState.analyzer.resolver
+    val fields = df.schema.fields
+    val keyRefs = tieKeys.map { k =>
+      val i = fields.indexWhere(f => resolver(f.name, k))
+      require(i >= 0, s"partitionRowCounts: no column $k in ${df.columns.mkString(", ")}")
+      BoundReference(i, fields(i).dataType, fields(i).nullable)
+    }
+    // the ordering compares the projected key rows, ordinals 0..k-1
+    val ordering = new InterpretedOrdering(keyRefs.zipWithIndex.map { case (r, i) =>
+      SortOrder(BoundReference(i, r.dataType, r.nullable), Ascending)
+    })
     df.queryExecution.toRdd.mapPartitionsWithIndex { (pid, rows) =>
       var n = 0L
-      while (rows.hasNext) { rows.next(); n += 1 }
-      Iterator.single(pid -> n)
+      var tied = false
+      if (keyRefs.isEmpty) while (rows.hasNext) { rows.next(); n += 1 }
+      else {
+        val project = UnsafeProjection.create(keyRefs)
+        var prev: org.apache.spark.sql.catalyst.InternalRow = null
+        while (rows.hasNext) {
+          val key = project(rows.next())
+          if (prev != null && !tied && ordering.compare(prev, key) == 0) tied = true
+          prev = key.copy()
+          n += 1
+        }
+      }
+      Iterator.single((pid, n, tied))
     }.collect().sortBy(_._1)
+  }
 
   /** SHA-256 hex fingerprint over the given columns, sorted by name. */
   def rowHash(colNames: Seq[String]): Column =

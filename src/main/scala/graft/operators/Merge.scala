@@ -87,32 +87,65 @@ object Merge {
     */
   def apply(src: DataFrame, tgt: DataFrame, keys: Seq[String],
             now: Column = current_timestamp()): DataFrame =
-    applyAbove(src, tgt, keys,
-      tgt.agg(coalesce(max(col("id")), lit(0L)).as("__max_id")), now)
+    applyAbove(src, tgt, keys, maxId(tgt), now)
 
-  /** As [[apply]] but minting insert ids above an EXPLICIT id
-    * watermark (a one-row frame with column `__max_id`) instead of
-    * `max(tgt.id)` — for callers merging into a SLICE of a larger
-    * target (the bucketed incremental sink,
-    * [[graft.streaming.Streams.mergeEachBatchBucketed]]), where the
+  /** As [[apply]] but minting insert ids above an EXPLICIT id watermark
+    * instead of `max(tgt.id)` — for callers that read the watermark from
+    * metadata (parquet footers: `Sinks.targetMaxId`), and for callers
+    * merging into a SLICE of a larger target (the bucketed incremental
+    * sink, [[graft.streaming.Streams.mergeEachBatchBucketed]]), where the
     * slice's max id is NOT the table's and slice-local minting would
-    * collide with ids in untouched buckets.
+    * collide with ids in untouched buckets. `maxId` must be ≥ every id in
+    * `tgt`; a low watermark silently mints colliding ids.
     */
-  def applyAbove(src: DataFrame, tgt: DataFrame, keys: Seq[String],
-                 maxIdDf: DataFrame,
-                 now: Column = current_timestamp()): DataFrame = {
+  def applyAbove(src: DataFrame, tgt: DataFrame, keys: Seq[String], maxId: Long,
+                 now: Column = current_timestamp()): DataFrame =
+    applyCounted(src, tgt, keys, maxId, now).merged
+
+  /** An [[applyCounted]] result: the merged target, the number of insert
+    * rows, and whether two insert rows share a key.
+    */
+  final case class Applied(merged: DataFrame, inserts: Long, insertKeysRepeat: Boolean)
+
+  /** [[applyAbove]] plus what its insert mint's count job learns on the
+    * way, at no extra job: the insert count `I` and whether two inserts
+    * share a key (null-safe, as `groupBy` groups — [[RowHash
+    * .orderedDenseIdByKeys]]).
+    *
+    * Together with the target's row count `T` these decide
+    * [[duplicateKeyAudit]] on the source without running it. A source key
+    * with a NULL part never matches the target (the joins use `===`), so it
+    * is always an insert; a repeated key is therefore either among the
+    * inserts (`insertKeysRepeat`) or matches a target row, and then every
+    * copy joins that row, so the merged target holds more than `T + I`
+    * rows. Conversely, with unique source keys each target row joins at
+    * most one source row and the merged target holds exactly `T + I`.
+    */
+  def applyCounted(src: DataFrame, tgt: DataFrame, keys: Seq[String], maxId: Long,
+                   now: Column = current_timestamp()): Applied = {
     val dataCols = src.columns.filterNot(AuditCols.contains).toSeq
     val outCols = dataCols ++ AuditCols
-    // keys are unique on the source (classify precondition), so they are a
-    // total order for the rank — no extra tiebreak needed.
-    val inserted = RowHash.orderedDenseId(
-        insertRows(src, tgt, keys, dataCols, now), keys.map(col), "__rn")
-      .crossJoin(broadcast(maxIdDf))
-      .withColumn("id", col("__max_id") + col("__rn"))
-      .select(outCols.map(col): _*)
-    keptOrUpdated(src, tgt, keys, dataCols, now)
-      .select(outCols.map(col): _*).unionByName(inserted)
+    val (inserted, ins) = insertedAbove(src, tgt, keys, dataCols, maxId, now)
+    Applied(keptOrUpdated(src, tgt, keys, dataCols, now)
+      .select(outCols.map(col): _*).unionByName(inserted), ins.rows, ins.keysRepeat)
   }
+
+  /** Insert rows with key-ordered ids `maxId+1..` (keys are unique on the
+    * source — the classify precondition — so they are a total order for the
+    * rank), in `dataCols ++ AuditCols` order, and the mint's counts.
+    */
+  private def insertedAbove(src: DataFrame, tgt: DataFrame, keys: Seq[String],
+                            dataCols: Seq[String], maxId: Long,
+                            now: Column): (DataFrame, RowHash.KeyedIds) = {
+    val minted = RowHash.orderedDenseIdByKeys(
+      insertRows(src, tgt, keys, dataCols, now), keys, "__rn")
+    (minted.df.withColumn("id", lit(maxId) + col("__rn"))
+      .select((dataCols ++ AuditCols).map(col): _*), minted)
+  }
+
+  /** `max(tgt.id)`, 0 for an empty target: one aggregate job over `tgt`. */
+  private def maxId(tgt: DataFrame): Long =
+    tgt.agg(coalesce(max(col("id")), lit(0L))).head().getLong(0)
 
   /** As [[apply]] but minting insert ids in partition order
     * (`Sinks.withDenseId`) instead of key order — saves the insert
@@ -123,12 +156,10 @@ object Merge {
                 now: Column = current_timestamp()): DataFrame =
     // one driver-side scalar (max id) — the only action. A parquet-backed
     // caller should skip this column scan entirely: read the watermark
-    // from footer statistics (Sinks.parquetMaxLong — metadata-only) or a
+    // from footer statistics (Sinks.targetMaxId — metadata-only) or a
     // persisted sidecar (the mergeEachBatchBucketed convention) and call
     // applyBulkAbove; this default stays for in-memory/arbitrary targets.
-    applyBulkAbove(src, tgt, keys,
-      tgt.agg(coalesce(max(col("id")), lit(0L)).as("m")).head().getLong(0),
-      now)
+    applyBulkAbove(src, tgt, keys, maxId(tgt), now)
 
   /** As [[applyBulk]] but minting above an EXPLICIT id watermark — the
     * [[applyAbove]] treatment for the bulk form, so a caller with a
@@ -171,15 +202,9 @@ object Merge {
   def applyChanged(src: DataFrame, tgt: DataFrame, keys: Seq[String],
                    now: Column = current_timestamp()): DataFrame = {
     val dataCols = src.columns.filterNot(AuditCols.contains).toSeq
-    val outCols = dataCols ++ AuditCols
-    val inserted = RowHash.orderedDenseId(
-        insertRows(src, tgt, keys, dataCols, now), keys.map(col), "__rn")
-      .crossJoin(broadcast(
-        tgt.agg(coalesce(max(col("id")), lit(0L)).as("__max_id"))))
-      .withColumn("id", col("__max_id") + col("__rn"))
-      .select(outCols.map(col): _*)
+    val (inserted, _) = insertedAbove(src, tgt, keys, dataCols, maxId(tgt), now)
     updatedOnly(src, tgt, keys, dataCols, now)
-      .select(outCols.map(col): _*).unionByName(inserted)
+      .select((dataCols ++ AuditCols).map(col): _*).unionByName(inserted)
   }
 
   /** The update branch of [[keptOrUpdated]] alone — an INNER join (only

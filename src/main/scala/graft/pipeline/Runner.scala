@@ -6,6 +6,7 @@ import java.util.concurrent.{Callable, ConcurrentLinkedQueue, ExecutionException
 import graft.functions.RowHash
 import graft.operators.{Filters, Merge}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** P3: the per-table pipeline loop — scan → filter → (semi-join) → audit
   * columns → full-refresh or hash-diff merge — with per-table error
@@ -115,38 +116,56 @@ object Runner {
         // ids only for inserts, so the audit columns (and the jobs that
         // mint them) are paid only on the branches that write them.
         val src = loadBare(spark, sfDir, spec)
-        val bootstrap = spec.refreshMode == RefreshMode.FullRefresh ||
-          !Sinks.exists(spark, path)
-        // The reference falls back to full refresh for tables whose
-        // configured key turns out unreliable (sync_INCREMENTAL.py:46-48,
-        // 270-343); duplicate keys would fan out the classify join. The
-        // audit is one extra source scan — only paid when it can change
-        // the outcome (not on bootstrap), and callers who bound key
-        // quality elsewhere can pass keyAudit = false.
-        val keyUnreliable = !bootstrap && keyAudit &&
-          Merge.duplicateKeyAudit(src, spec.keys).limit(1).count() > 0
+        def refresh(mode: String) = (Sinks.fullRefresh(withAudit(src, spec), path), mode)
         val (rows, mode) =
-          if (bootstrap || keyUnreliable)
-            (Sinks.fullRefresh(withAudit(src, spec), path),
-              if (keyUnreliable) "full_refresh_fallback_dup_keys" else "full_refresh")
-          else {
-            val tgt = Merge.evolveTarget(src, Sinks.readParquet(spark, path))
-            // Merge.apply emits data-then-audit column order; keep the
-            // stored layout stable across runs (evolved columns append).
-            // A column the SOURCE dropped is absent from the merge output —
-            // the stored schema follows the source (the source of truth),
-            // intersecting here instead of failing the table forever.
-            val merged = Merge.apply(src, tgt, spec.keys)
-            val keep = tgt.columns.filter(merged.columns.contains)
-            (Sinks.overwriteViaStaging(
-              merged.select(keep.toIndexedSeq.map(org.apache.spark.sql.functions.col): _*), path),
-              "incremental")
-          }
+          if (spec.refreshMode == RefreshMode.FullRefresh || !Sinks.exists(spark, path))
+            refresh("full_refresh")
+          else mergeStaged(spark, src, spec, path, keyAudit)
+            .map(n => (n, "incremental"))
+            .getOrElse(refresh("full_refresh_fallback_dup_keys"))
         TableResult(spec.name, rows, None, mode)
       } catch {
         case e: Exception => TableResult(spec.name, -1, Some(e.toString))
       }
     }
+
+  /** Hash-diff merge `src` into the parquet table at `path` and swap the
+    * result in: Some(rows written), or None — nothing written — when the
+    * key proves unreliable, i.e. when `Merge.duplicateKeyAudit(src, keys)`
+    * is non-empty. The reference falls back to full refresh for such
+    * tables (sync_INCREMENTAL.py:46-48, 270-343): duplicate keys fan out
+    * the merge join. The proof rides the merge's own work instead of an
+    * audit pass ([[Merge.applyCounted]]): the insert mint's count job says
+    * whether two inserts share a key, and the staged output must hold
+    * exactly the target's footer row count plus the inserts, or some
+    * target row matched two source rows. With `keyAudit = false` (callers
+    * who bound key quality elsewhere) the merge is swapped in unchecked.
+    */
+  private def mergeStaged(spark: SparkSession, src: DataFrame, spec: TableSpec,
+                          path: String, keyAudit: Boolean): Option[Long] = {
+    val tgt = Merge.evolveTarget(src, Sinks.readParquet(spark, path))
+    // the id watermark from footers: no max(id) job over the target
+    val applied = Merge.applyCounted(src, tgt, spec.keys, Sinks.targetMaxId(spark, path))
+    // Merge emits data-then-audit column order; keep the stored layout
+    // stable across runs (evolved columns append) and its spelling (names
+    // match case-insensitively, as evolveTarget matches them). A column
+    // the SOURCE dropped is absent from the merge output — the stored
+    // schema follows the source (the source of truth), intersecting here
+    // instead of failing the table forever.
+    val out = applied.merged.select(tgt.columns.toIndexedSeq.flatMap(c =>
+      applied.merged.columns.find(_.equalsIgnoreCase(c)).map(m => col(m).as(c))): _*)
+    if (!keyAudit) Some(Sinks.overwriteViaStaging(out, path))
+    else if (applied.insertKeysRepeat) None
+    else {
+      val expected = Sinks.countVerify(spark, path) + applied.inserts
+      Sinks.overwriteViaStagingIf(out, path) { n =>
+        if (n < expected) throw new IllegalStateException(
+          s"Runner: merged ${spec.name} holds $n rows, fewer than the target " +
+            s"plus its inserts ($expected)")
+        n == expected
+      }
+    }
+  }
 
   /** `f` over `specs`, results in spec order, on a fresh pool of
     * `min(specs.size, defaultParallelism)` daemon threads (in the caller's

@@ -106,14 +106,34 @@ object Sinks {
   def overwriteViaStagingWith(df: DataFrame, path: String,
                               partitionBy: Seq[String] = Nil)
                              (sidecars: String => Unit): Long = {
+    writeStaging(df, path, partitionBy)
+    sidecars(path + "__staging")
+    commitStaged(df.sparkSession, path)
+  }
+
+  /** [[overwriteViaStaging]] that swaps only when `accept` holds of the
+    * staged row count (footers, no Spark job): Some(rows) after the swap,
+    * or None with the target untouched. Either way, and when `accept`
+    * throws, no `__staging` directory is left behind.
+    */
+  def overwriteViaStagingIf(df: DataFrame, path: String)
+                           (accept: Long => Boolean): Option[Long] = {
     val spark = df.sparkSession
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new Path(path + "__staging"), true)
+    val staging = path + "__staging"
+    writeStaging(df, path, Nil)
+    var ok = false
+    try {
+      val rows = countVerify(spark, staging)
+      ok = accept(rows)
+      if (ok) Some(commitStaged(spark, path)) else None
+    } finally if (!ok) drop(spark, staging): Unit
+  }
+
+  private def writeStaging(df: DataFrame, path: String, partitionBy: Seq[String]): Unit = {
+    drop(df.sparkSession, path + "__staging")
     val w = df.write.mode(SaveMode.Overwrite)
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
       .parquet(path + "__staging")
-    sidecars(path + "__staging")
-    commitStaged(spark, path)
   }
 
 
@@ -694,6 +714,17 @@ object Sinks {
     }.flatten.maxOption
     catch { case _: java.io.IOException | _: RuntimeException => None }
   }
+
+  /** The id watermark of the table at `path`: the max of its `id` column
+    * from parquet footer statistics ([[parquetMaxLong]], no data pages),
+    * falling back to a column scan only when some footer lacks usable
+    * statistics. 0 for a table with no id.
+    */
+  def targetMaxId(spark: SparkSession, path: String): Long =
+    parquetMaxLong(spark, path, "id").getOrElse {
+      import org.apache.spark.sql.functions.{coalesce, col, lit, max}
+      spark.read.parquet(path).agg(coalesce(max(col("id")), lit(0L))).head().getLong(0)
+    }
 
   /** S3: target-state scan — key columns + id + row_hash, the build side of
     * the CDC merge (sync_INCREMENTAL.py:226-268). Unlike the reference this

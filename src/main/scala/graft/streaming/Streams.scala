@@ -280,7 +280,8 @@ object Streams {
     val exists = graft.pipeline.Sinks.exists(spark, targetPath)
     val merged =
       if (!exists) graft.functions.RowHash.withAuditColumns(batch, keys)
-      else Merge.apply(batch, spark.read.parquet(targetPath), keys)
+      else Merge.applyAbove(batch, spark.read.parquet(targetPath), keys,
+        graft.pipeline.Sinks.targetMaxId(spark, targetPath))
     // Rewrite via a temp dir: the plan reads the same path it overwrites.
     val tmpPath = targetPath + "__staging"
     merged.write.mode("overwrite").parquet(tmpPath)
@@ -358,7 +359,7 @@ object Streams {
       // files) metadata); a crash before this lands is the "missing
       // sidecar" case the else-branch self-repairs from the same footers.
       writeMaxIdSidecar(spark, targetPath,
-        readTargetMaxId(spark, targetPath))
+        graft.pipeline.Sinks.targetMaxId(spark, targetPath))
     } else {
       val changed = batch.select(kbOf(keys.map(col)).as("__kb"))
         .distinct().collect().map(_.getInt(0)).toSeq // bounded by nBuckets
@@ -368,9 +369,8 @@ object Streams {
           .drop("__kb")
         // O(1) watermark read; footer-stats (then scan) repair when absent
         val baseMax = readMaxIdSidecar(spark, targetPath).getOrElse(
-          readTargetMaxId(spark, targetPath))
-        val maxIdDf = spark.range(1).select(lit(baseMax).as("__max_id"))
-        val merged = Merge.applyAbove(batch, slice, keys, maxIdDf)
+          graft.pipeline.Sinks.targetMaxId(spark, targetPath))
+        val merged = Merge.applyAbove(batch, slice, keys, baseMax)
           .withColumn("__kb", kbOf(keys.map(col)))
           .localCheckpoint(true)
         try {
@@ -437,17 +437,6 @@ object Streams {
     if (!fs.rename(tmp, p)) throw new java.io.IOException(
       s"mergeEachBatchBucketed: failed to commit id-watermark sidecar $p")
   }
-
-  /** Migration/repair read of the target's max id: parquet footer
-    * statistics first (metadata-only), full column scan only when some
-    * footer lacks usable stats. Empty target → 0.
-    */
-  private def readTargetMaxId(spark: org.apache.spark.sql.SparkSession,
-                              targetPath: String): Long =
-    graft.pipeline.Sinks.parquetMaxLong(spark, targetPath, "id").getOrElse {
-      val t = spark.read.parquet(targetPath)
-      t.agg(coalesce(max(col("id")), lit(0L)).as("m")).head().getLong(0)
-    }
 
   /** Dedup-on-ingest: every micro-batch is probed against the PERSISTED
     * MinHash index ([[graft.operators.Dedup.minHashProbeIndex]]); docs whose

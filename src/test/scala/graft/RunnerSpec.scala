@@ -198,6 +198,26 @@ class RunnerSpec extends SparkSpec {
     assert(done.asScala.toSet == c0Specs.tail.map(_.name).toSet)
   }
 
+  test("a case-only rename of a source column keeps the column, in its stored spelling") {
+    val root = tmp()
+    write(spark.range(1, 21).select(col("id").as("k"), (col("id") * 2.5).as("importe")),
+      s"$root/c0", "pay")
+    write(spark.range(1, 24).select(col("id").as("k"),
+      (col("id") * 2.5 + when(col("id") % 5 === 0, 1.0).otherwise(0.0)).as("Importe")),
+      s"$root/c1", "pay")
+    val base = tmp()
+    val specs = Seq(TableSpec("pay", Seq("k"), Nil, RefreshMode.Incremental))
+    assert(Runner.syncIncremental(spark, s"$root/c0", specs, base).map(_.mode) ==
+      Seq("full_refresh"))
+    val res = Runner.syncIncremental(spark, s"$root/c1", specs, base)
+    assert(res.map(r => (r.mode, r.rows, r.error)) == Seq(("incremental", 23L, None)),
+      res.mkString("; "))
+    val stored = spark.read.parquet(s"$base/pay")
+    assert(stored.columns.toSeq == Seq("id", "k", "importe", "row_hash", "created_at", "updated_at"))
+    val got = stored.select("k", "importe").as[(Long, Double)].collect().sortBy(_._1).toSeq
+    assert(got == (1L to 23L).map(k => (k, k * 2.5 + (if (k % 5 == 0) 1.0 else 0.0))))
+  }
+
   test("duplicate spec names fail early, before any table runs") {
     val (c0, _) = snapshots()
     val base = tmp()

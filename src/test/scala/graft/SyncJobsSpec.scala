@@ -144,4 +144,43 @@ class SyncJobsSpec extends SparkSpec {
       .forall(_.contains("Merge$.apply")))
     assert(res.head.rows == spark.read.parquet(s"$base/orders").count())
   }
+
+  test("syncIncremental's merged branch runs no duplicate-key audit and no max(id) " +
+    "aggregate") {
+    import org.apache.spark.scheduler.SparkListenerEvent
+    import org.apache.spark.sql.execution.SparkPlanInfo
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val base = tmp()
+    val orders = TableSpec("orders", Seq("o_orderkey"), Seq(Filters.eq("o_orderstatus", "O")),
+      RefreshMode.Incremental, Some(("customer", "c_custkey", "o_custkey")))
+    val specs = Seq(orders, TableSpec("customer", Seq("c_custkey"), Nil, RefreshMode.Incremental))
+    assert(Runner.syncIncremental(spark, sf, specs, base).map(_.mode) ==
+      Seq("full_refresh", "full_refresh"))
+
+    // every plan node of every SQL execution the merged branch starts
+    val nodes = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlanInfo]
+    def walk(p: SparkPlanInfo): Unit = { nodes.add(p); p.children.foreach(walk) }
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => walk(s.sparkPlanInfo)
+        case _ =>
+      }
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.TestBus.drain(sc)
+    sc.addSparkListener(listener)
+    val res = try {
+      val r = Runner.syncIncremental(spark, sf, specs, base)
+      org.apache.spark.TestBus.drain(sc)
+      r
+    } finally sc.removeSparkListener(listener)
+    assert(res.map(_.mode) == Seq("incremental", "incremental") && res.forall(_.error.isEmpty),
+      res.mkString("; "))
+    val aggs = nodes.toArray(Array.empty[SparkPlanInfo]).toSeq
+      .filter(_.nodeName.contains("Aggregate")).map(_.simpleString)
+    assert(nodes.size > 0)
+    assert(!aggs.exists(_.contains("max(")), aggs.mkString("\n"))
+    val keyNames = specs.flatMap(_.keys)
+    assert(!aggs.exists(a => keyNames.exists(k => a.contains(s"keys=[$k#"))), aggs.mkString("\n"))
+  }
 }

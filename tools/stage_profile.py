@@ -13,12 +13,21 @@ elapsed seconds (the union of the execution intervals) and the overlap
 
     python3 tools/stage_profile.py LOG [--sort task_s] [--limit N]
     python3 tools/stage_profile.py LOG --by group
+    python3 tools/stage_profile.py LOG --by site
 
 `--by group` rolls the jobs up by Spark job group (`spark.jobGroup.id`;
 perfbench sets one per traced layer, traced or not) instead: jobs, jobs
 outside any SQL execution (mostly parquet schema inference), task seconds
 and elapsed seconds (the union of the group's job intervals). Jobs with no
 group are grouped under "-".
+
+`--by site` rolls them up by the graft operator that started them: the
+first `graft.` frame of the call-site stack (`details`) of the job's SQL
+execution, or of its result stage for a job outside any, printed as
+`Class.method:line`. It splits one job group into operators — `Runner`'s
+pool threads give every table's jobs the same group. Columns as for
+`--by group`, plus the SQL executions; jobs with no `graft.` frame (the
+caller's own actions) are grouped under "-".
 
 LOG is an uncompressed event log: a file, a rolling-log directory
 (`eventlog_v2_<app>`, its `events_<n>_<app>` parts read in order), or a
@@ -31,6 +40,7 @@ directory of those (the newest is read). Write one with, for example:
 import argparse
 import json
 import os
+import re
 import sys
 
 NONE = "-"
@@ -158,6 +168,118 @@ def by_group(lines):
     return list(groups.values())
 
 
+def frame_site(details):
+    """The first `graft.` frame of a call-site stack, as Class.method:line.
+
+    >>> frame_site("org.apache.spark.sql.Dataset.count(Dataset.scala:1)\\n"
+    ...            "graft.pipeline.Runner$.$anonfun$syncIncremental$1(Runner.scala:103)\\n"
+    ...            "perfbench.EtlSync.round(EtlSync.scala:251)")
+    'Runner.syncIncremental:103'
+    >>> frame_site("graft.pipeline.BatchAppend$.graft$pipeline$BatchAppend$$mark(BatchAppend.scala:170)")
+    'BatchAppend.mark:170'
+    >>> frame_site("org.apache.spark.rdd.RDD.collect(RDD.scala:1)")
+    '-'
+    """
+    for line in (details or "").splitlines():
+        frame = line.strip()
+        if frame.startswith("at "):
+            frame = frame[3:]
+        if not frame.startswith("graft."):
+            continue
+        head, _, where = frame.partition("(")
+        cls, _, meth = head.rpartition(".")
+        # `$anonfun$name$1` (a lambda) and `pkg$Owner$$name` (a private
+        # method's mangled name) both stand for `name`
+        meth = re.match(r"(?:\$anonfun\$)*([^$]*)", meth.split("$$")[-1]).group(1) or meth
+        line_no = where.rstrip(")").rpartition(":")[2]
+        return f"{cls.rsplit('.', 1)[-1].rstrip('$')}.{meth}:{line_no}"
+    return NONE
+
+
+def by_site(lines):
+    """One row per call site (`frame_site`): SQL executions, jobs, jobs
+    outside SQL executions, task seconds and elapsed seconds.
+
+    >>> runner = "x.y(Y.scala:1)\\ngraft.pipeline.Sinks$.fullRefresh(Sinks.scala:26)"
+    >>> ev = [
+    ...   {"Event": "org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart",
+    ...    "executionId": 3, "details": runner},
+    ...   {"Event": "SparkListenerJobStart", "Job ID": 0, "Submission Time": 1000,
+    ...    "Stage Infos": [{"Stage ID": 0, "Details": "ignored"}],
+    ...    "Properties": {"spark.sql.execution.id": "3"}},
+    ...   {"Event": "SparkListenerTaskEnd", "Stage ID": 0,
+    ...    "Task Metrics": {"Executor Run Time": 500}},
+    ...   {"Event": "SparkListenerJobEnd", "Job ID": 0, "Completion Time": 1800},
+    ...   {"Event": "SparkListenerJobStart", "Job ID": 1, "Submission Time": 2000,
+    ...    "Stage Infos": [{"Stage ID": 1, "Details": "java.lang.Thread.run(T.java:1)"},
+    ...                    {"Stage ID": 2, "Details":
+    ...        "org.apache.spark.rdd.RDD.collect(RDD.scala:1)\\n"
+    ...        "graft.functions.RowHash$.partitionRowCounts(RowHash.scala:99)"}]},
+    ...   {"Event": "SparkListenerJobEnd", "Job ID": 1, "Completion Time": 2100}]
+    >>> for r in by_site(json.dumps(e) for e in ev):
+    ...     print(r["site"], r["executions"], r["jobs"], r["outside_sql"],
+    ...           r["task_s"], r["elapsed_s"])
+    Sinks.fullRefresh:26 1 1 0 0.5 0.8
+    RowHash.partitionRowCounts:99 0 1 1 0.0 0.1
+    """
+    sites = {}  # site -> row
+    exec_site, job_site, stage_site, spans, execs = {}, {}, {}, {}, {}
+
+    def row(site):
+        return sites.setdefault(site, {"site": site, "executions": 0, "jobs": 0,
+                                       "outside_sql": 0, "task_s": 0.0,
+                                       "elapsed_s": 0.0})
+
+    for line in lines:
+        ev = json.loads(line)
+        kind = ev.get("Event", "")
+        if kind.endswith("SparkListenerSQLExecutionStart"):
+            exec_site[ev["executionId"]] = frame_site(ev.get("details"))
+        elif kind == "SparkListenerJobStart":
+            eid = exec_id(ev.get("Properties"))
+            stages = ev.get("Stage Infos") or []
+            if eid != NONE:
+                site = exec_site.get(eid, NONE)
+                execs.setdefault(site, set()).add(eid)
+            else:  # the result stage (the job's last) carries the action's site
+                last = max(stages, key=lambda st: st["Stage ID"], default={})
+                site = frame_site(last.get("Details"))
+            r = row(site)
+            r["jobs"] += 1
+            r["outside_sql"] += eid == NONE
+            job_site[ev["Job ID"]] = site
+            for st in stages:
+                stage_site[st["Stage ID"]] = site
+            spans.setdefault(site, {})[ev["Job ID"]] = [ev.get("Submission Time"), None]
+        elif kind == "SparkListenerJobEnd":
+            site = job_site.get(ev["Job ID"])
+            if site is not None:
+                spans[site][ev["Job ID"]][1] = ev.get("Completion Time")
+        elif kind == "SparkListenerTaskEnd":
+            m = ev.get("Task Metrics") or {}
+            row(stage_site.get(ev["Stage ID"], NONE))["task_s"] += \
+                m.get("Executor Run Time", 0) / 1000.0
+    for site, r in sites.items():
+        r["executions"] = len(execs.get(site, ()))
+        r["elapsed_s"] = union_seconds([(lo, hi) for lo, hi in spans.get(site, {}).values()
+                                        if lo is not None and hi is not None])
+    return list(sites.values())
+
+
+def print_sites(rows, sort):
+    key = {"id": "site", "wall_s": "elapsed_s"}.get(sort, sort)
+    rows.sort(key=lambda r: (r["site"] == NONE, r["site"]) if key == "site"
+              else -r.get(key, 0))
+    fmt = "{:<44} {:>5} {:>5} {:>11} {:>8} {:>9}"
+    print(fmt.format("site", "execs", "jobs", "outside_sql", "task_s", "elapsed_s"))
+    for r in rows:
+        print(fmt.format(r["site"][:44], r["executions"], r["jobs"], r["outside_sql"],
+                         f"{r['task_s']:.2f}", f"{r['elapsed_s']:.2f}"))
+    print(fmt.format("total", sum(r["executions"] for r in rows),
+                     sum(r["jobs"] for r in rows), sum(r["outside_sql"] for r in rows),
+                     f"{sum(r['task_s'] for r in rows):.2f}", ""))
+
+
 def print_groups(rows, sort):
     key = {"id": "group", "wall_s": "elapsed_s"}.get(sort, sort)
     rows.sort(key=lambda r: (r["group"] == NONE, r["group"]) if key == "group"
@@ -199,11 +321,15 @@ def main():
                              "task_s", "shuffle_read", "shuffle_write"])
     ap.add_argument("--limit", type=int, default=0,
                     help="print only the first N rows after sorting")
-    ap.add_argument("--by", default="execution", choices=["execution", "group"],
-                    help="one row per SQL execution (default) or per job group")
+    ap.add_argument("--by", default="execution", choices=["execution", "group", "site"],
+                    help="one row per SQL execution (default), per job group or "
+                         "per graft call site")
     a = ap.parse_args()
     if a.by == "group":
         print_groups(by_group(lines(log_files(a.log))), a.sort)
+        return
+    if a.by == "site":
+        print_sites(by_site(lines(log_files(a.log))), a.sort)
         return
     rows = profile(lines(log_files(a.log)))
     for r in rows:
