@@ -149,8 +149,10 @@ object RowHash {
     */
   private def partitionRowCounts(df: DataFrame,
                                  tieKeys: Seq[String]): Array[(Int, Long, Boolean)] = {
-    import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference,
-      InterpretedOrdering, SortOrder, UnsafeProjection}
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, SortOrder,
+      UnsafeProjection}
+    import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
     val resolver = df.sparkSession.sessionState.analyzer.resolver
     val fields = df.schema.fields
     val keyRefs = tieKeys.map { k =>
@@ -159,23 +161,27 @@ object RowHash {
       BoundReference(i, fields(i).dataType, fields(i).nullable)
     }
     // the ordering compares the projected key rows, ordinals 0..k-1
-    val ordering = new InterpretedOrdering(keyRefs.zipWithIndex.map { case (r, i) =>
+    val ordering = new LazilyGeneratedOrdering(keyRefs.zipWithIndex.map { case (r, i) =>
       SortOrder(BoundReference(i, r.dataType, r.nullable), Ascending)
     })
     df.queryExecution.toRdd.mapPartitionsWithIndex { (pid, rows) =>
       var n = 0L
       var tied = false
-      if (keyRefs.isEmpty) while (rows.hasNext) { rows.next(); n += 1 }
-      else {
-        val project = UnsafeProjection.create(keyRefs)
-        var prev: org.apache.spark.sql.catalyst.InternalRow = null
-        while (rows.hasNext) {
-          val key = project(rows.next())
-          if (prev != null && !tied && ordering.compare(prev, key) == 0) tied = true
-          prev = key.copy()
+      if (keyRefs.nonEmpty) {
+        // two projections, taking turns: each reuses its output row, so the
+        // previous key stays valid while the other projects the next one,
+        // with no copy per row
+        val project = Array.fill(2)(UnsafeProjection.create(keyRefs))
+        var prev: InternalRow = null
+        while (!tied && rows.hasNext) {
+          val key = project((n & 1).toInt)(rows.next())
+          tied = prev != null && ordering.compare(prev, key) == 0
+          prev = key
           n += 1
         }
       }
+      // once a tie is found (or with no keys) only the count is left
+      while (rows.hasNext) { rows.next(); n += 1 }
       Iterator.single((pid, n, tied))
     }.collect().sortBy(_._1)
   }

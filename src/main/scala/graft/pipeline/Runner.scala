@@ -122,7 +122,11 @@ object Runner {
             refresh("full_refresh")
           else mergeStaged(spark, src, spec, path, keyAudit)
             .map(n => (n, "incremental"))
-            .getOrElse(refresh("full_refresh_fallback_dup_keys"))
+            .getOrElse {
+              val done = refresh("full_refresh_fallback_dup_keys")
+              markKeysRepeat(spark, path)
+              done
+            }
         TableResult(spec.name, rows, None, mode)
       } catch {
         case e: Exception => TableResult(spec.name, -1, Some(e.toString))
@@ -140,31 +144,59 @@ object Runner {
     * exactly the target's footer row count plus the inserts, or some
     * target row matched two source rows. With `keyAudit = false` (callers
     * who bound key quality elsewhere) the merge is swapped in unchecked.
+    *
+    * The count check finds a repeated matched key only after the merge is
+    * staged, and by then the merge has fanned out: a key with r copies in
+    * the source and m in the target stages r·m rows. After a fallback the
+    * target holds the source's repeats, so a key that keeps repeating would
+    * pay that every cycle (a table bootstrapped from a source whose key
+    * already repeats pays it once). A fallback therefore leaves a
+    * [[KeysRepeatMark]] in the table it writes, and while the mark is
+    * there the audit runs first, as the reference's does: a still-repeating
+    * key falls back with nothing staged. A merge keeps every target row,
+    * repeats included, so a merged table keeps its mark; only a full
+    * refresh that is no fallback drops it.
     */
   private def mergeStaged(spark: SparkSession, src: DataFrame, spec: TableSpec,
                           path: String, keyAudit: Boolean): Option[Long] = {
-    val tgt = Merge.evolveTarget(src, Sinks.readParquet(spark, path))
-    // the id watermark from footers: no max(id) job over the target
-    val applied = Merge.applyCounted(src, tgt, spec.keys, Sinks.targetMaxId(spark, path))
-    // Merge emits data-then-audit column order; keep the stored layout
-    // stable across runs (evolved columns append) and its spelling (names
-    // match case-insensitively, as evolveTarget matches them). A column
-    // the SOURCE dropped is absent from the merge output — the stored
-    // schema follows the source (the source of truth), intersecting here
-    // instead of failing the table forever.
-    val out = applied.merged.select(tgt.columns.toIndexedSeq.flatMap(c =>
-      applied.merged.columns.find(_.equalsIgnoreCase(c)).map(m => col(m).as(c))): _*)
-    if (!keyAudit) Some(Sinks.overwriteViaStaging(out, path))
-    else if (applied.insertKeysRepeat) None
+    val marked = Sinks.exists(spark, s"$path/$KeysRepeatMark")
+    if (keyAudit && marked && Merge.duplicateKeyAudit(src, spec.keys).limit(1).count() > 0) None
     else {
-      val expected = Sinks.countVerify(spark, path) + applied.inserts
-      Sinks.overwriteViaStagingIf(out, path) { n =>
-        if (n < expected) throw new IllegalStateException(
-          s"Runner: merged ${spec.name} holds $n rows, fewer than the target " +
-            s"plus its inserts ($expected)")
-        n == expected
+      val tgt = Merge.evolveTarget(src, Sinks.readParquet(spark, path))
+      // the id watermark from footers: no max(id) job over the target
+      val applied = Merge.applyCounted(src, tgt, spec.keys, Sinks.targetMaxId(spark, path))
+      // Merge emits data-then-audit column order; keep the stored layout
+      // stable across runs (evolved columns append) and its spelling (names
+      // match case-insensitively, as evolveTarget matches them). A column
+      // the SOURCE dropped is absent from the merge output — the stored
+      // schema follows the source (the source of truth), intersecting here
+      // instead of failing the table forever.
+      val out = applied.merged.select(tgt.columns.toIndexedSeq.flatMap(c =>
+        applied.merged.columns.find(_.equalsIgnoreCase(c)).map(m => col(m).as(c))): _*)
+      val keepMark: String => Unit = staging => if (marked) markKeysRepeat(spark, staging)
+      if (!keyAudit) Some(Sinks.overwriteViaStagingWith(out, path)(keepMark))
+      else if (applied.insertKeysRepeat) None
+      else {
+        val expected = Sinks.countVerify(spark, path) + applied.inserts
+        Sinks.overwriteViaStagingIf(out, path, keepMark) { n =>
+          if (n < expected) throw new IllegalStateException(
+            s"Runner: merged ${spec.name} holds $n rows, fewer than the target " +
+              s"plus its inserts ($expected)")
+          n == expected
+        }
       }
     }
+  }
+
+  /** The file a duplicate-key fallback leaves in the table it writes: the
+    * table may hold repeated keys. `_`-prefixed, so no parquet reader
+    * sees it.
+    */
+  private val KeysRepeatMark = "_keys_repeat"
+
+  private def markKeysRepeat(spark: SparkSession, path: String): Unit = {
+    val mark = new org.apache.hadoop.fs.Path(path, KeysRepeatMark)
+    mark.getFileSystem(spark.sparkContext.hadoopConfiguration).create(mark, true).close()
   }
 
   /** `f` over `specs`, results in spec order, on a fresh pool of

@@ -111,21 +111,24 @@ object Sinks {
     commitStaged(df.sparkSession, path)
   }
 
-  /** [[overwriteViaStaging]] that swaps only when `accept` holds of the
-    * staged row count (footers, no Spark job): Some(rows) after the swap,
-    * or None with the target untouched. Either way, and when `accept`
-    * throws, no `__staging` directory is left behind.
+  /** [[overwriteViaStagingWith]] that swaps only when `accept` holds of
+    * the staged row count (footers, no Spark job): Some(rows) after the
+    * swap, or None with the target untouched. Unless the swap runs, no
+    * `__staging` directory is left behind: not on a rejection, nor when
+    * the staged write, `accept` or `sidecars` throws.
     */
-  def overwriteViaStagingIf(df: DataFrame, path: String)
+  def overwriteViaStagingIf(df: DataFrame, path: String, sidecars: String => Unit = _ => ())
                            (accept: Long => Boolean): Option[Long] = {
     val spark = df.sparkSession
     val staging = path + "__staging"
-    writeStaging(df, path, Nil)
     var ok = false
     try {
-      val rows = countVerify(spark, staging)
-      ok = accept(rows)
-      if (ok) Some(commitStaged(spark, path)) else None
+      writeStaging(df, path, Nil)
+      if (accept(countVerify(spark, staging))) {
+        sidecars(staging)
+        ok = true
+        Some(commitStaged(spark, path))
+      } else None
     } finally if (!ok) drop(spark, staging): Unit
   }
 

@@ -154,6 +154,75 @@ class SyncFallbackSpec extends SparkSpec {
       (1L to 55L).map(i => Seq(i, s"c$i"))) == "incremental")
   }
 
+  /** Rows the block's tasks wrote, from their output metrics. */
+  private def written[T](f: => T): (T, Long) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+    val sc = spark.sparkContext
+    val rows = new java.util.concurrent.atomic.AtomicLong
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => rows.addAndGet(m.outputMetrics.recordsWritten))
+    }
+    org.apache.spark.TestBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val r = f
+      org.apache.spark.TestBus.drain(sc)
+      (r, rows.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a heavily repeated key stages the fan-out at most once: while the table is " +
+    "marked, nothing is staged until the keys are unique, and merges keep the mark") {
+    val root = tmp()
+    val r = 300 // copies of key 3 in a repeating cycle
+    val repeating = updated1(Seq.fill(r - 1)(Seq(3L, "again")))
+    val unique = updated1(Seq(Seq(46L, "n46")))
+    val cycles = Seq(base1, repeating, repeating, unique, repeating, unique)
+    cycles.zipWithIndex.foreach { case (rows, i) =>
+      frame(schema1, rows).write.mode(SaveMode.Overwrite).parquet(s"$root/c$i/t.parquet")
+    }
+    val spec = TableSpec("t", Seq("k"), Nil, RefreshMode.Incremental)
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val mark = new Path(s"$root/new/t/_keys_repeat")
+    val staged = cycles.zipWithIndex.map { case (src, i) =>
+      val before = if (i == 0) 0L else spark.read.parquet(s"$root/new/t").count()
+      val (res, wrote) = written(Runner.syncIncremental(spark, s"$root/c$i", Seq(spec), s"$root/new"))
+      val (wantRows, wantMode) =
+        if (i == 0) (Sinks.fullRefresh(Runner.loadTable(spark, s"$root/c0", spec), s"$root/ref/t"),
+          "full_refresh")
+        else auditFirst(s"$root/c$i", spec, s"$root/ref", keyAudit = true)
+      val got = res.head
+      assert(got.error.isEmpty && got.mode == wantMode && got.rows == wantRows, s"cycle $i: $got")
+      // the stored table matches the audit-first sync's, row for row
+      val data = Seq("id", "k", "v", "row_hash").map(col)
+      val (a, b) = (spark.read.parquet(s"$root/new/t").select(data: _*),
+        spark.read.parquet(s"$root/ref/t").select(data: _*))
+      assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty, s"cycle $i: stored tables differ")
+      // rows staged: all written rows but the fallback's full refresh; a
+      // merge that fans out no more than the source's own rows stays linear
+      val stagedRows = wrote - (if (got.mode == "full_refresh_fallback_dup_keys") got.rows else 0L)
+      assert(stagedRows <= before + src.size,
+        s"cycle $i staged $stagedRows rows over a target of $before")
+      assert(fs.exists(mark) == (i >= 1), s"cycle $i: mark ${fs.exists(mark)}")
+      for (leftover <- Seq("t__staging", "t__old"))
+        assert(!fs.exists(new Path(s"$root/new/$leftover")), s"cycle $i: $leftover left behind")
+      (got.mode, stagedRows)
+    }
+    assert(staged.map(_._1) == Seq("full_refresh", "full_refresh_fallback_dup_keys",
+      "full_refresh_fallback_dup_keys", "incremental", "full_refresh_fallback_dup_keys",
+      "incremental"), staged.mkString(", "))
+    // the first repeat over the unmarked target fans out once: its 40 rows,
+    // 5 inserts and r - 1 extra copies of key 3; every repeat over the
+    // marked table stages nothing
+    assert(staged(1)._2 == base1.size + 5 + r - 1, staged.mkString(", "))
+    assert(staged(2)._2 == 0 && staged(4)._2 == 0, staged.mkString(", "))
+    // a full refresh that is no fallback writes the table afresh: no mark
+    val refreshed = Runner.syncIncremental(spark, s"$root/c0",
+      Seq(spec.copy(refreshMode = RefreshMode.FullRefresh)), s"$root/new")
+    assert(refreshed.map(_.mode) == Seq("full_refresh") && !fs.exists(mark))
+  }
+
   test("keyAudit = false merges whatever the keys, as it did with the audit first") {
     assert(check("no audit, unique", schema1, Seq("k"), base1, updated1(Nil),
       keyAudit = false) == "incremental")
