@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.pipeline.IndexLifecycle
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -391,24 +392,17 @@ object Dedup {
   /** O(batch) SimHash index maintenance — the [[minHashAppendIndex]]
     * contract: signature the new batch (map-side native, no shuffle) and
     * append its rows; corpus text is never re-read. `batchTag` makes the
-    * append EXACTLY-ONCE ([[graft.pipeline.BatchAppend]]): replayed
-    * duplicate signature rows keep probes correct (pairs distinct) but
-    * silently double the index and every probe join.
+    * append exactly-once ([[IndexLifecycle.append]]): replayed duplicate
+    * signature rows keep probes correct (pairs distinct) but silently
+    * double the index and every probe join.
     */
   def simHashAppendIndex(newDocs: DataFrame, idCol: String, textCol: String,
                          path: String,
                          batchTag: Option[String] = None): Unit = {
-    def rows(docs: DataFrame) = simHashSignatures(docs, idCol, textCol)
-      .withColumnRenamed("simhash", "sig")
-    batchTag match {
-      case None =>
-        rows(newDocs).write.mode(org.apache.spark.sql.SaveMode.Append).parquet(path)
-      case Some(tag) =>
-        graft.pipeline.BatchAppend.exactlyOnce(path, tag, newDocs,
-          Seq(idCol, textCol), Seq(path)) { c =>
-          c.append(rows(c.frame), path)
-        }: Unit
-    }
+    IndexLifecycle.append(path, batchTag, newDocs, Seq(idCol, textCol), Seq(path)) { c =>
+      c.append(simHashSignatures(c.frame, idCol, textCol).withColumnRenamed("simhash", "sig"),
+        path)
+    }: Unit
   }
 
   /** Probe NEW documents against a persisted SimHash index within a
@@ -774,30 +768,21 @@ object Dedup {
                            localEdgeLimit: Long = 1L << 20,
                            overwrite: Boolean = false): Unit = {
     val spark = pairs.sparkSession
-    require(overwrite || !graft.pipeline.Sinks.exists(spark, s"$path/meta"),
-      s"componentsWriteIndex: an index already exists at $path — use " +
-        "componentsAppendIndex for new batches, or pass overwrite = true")
+    IndexLifecycle.requireNew(spark, path, overwrite, "componentsWriteIndex",
+      "componentsAppendIndex")
     val labels = duplicateGroups(pairs, maxIter, localEdgeLimit)
     labels.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(s"$path/labels")
     import spark.implicits._
-    Seq(Tuple1(labels.schema("id").dataType.typeName)).toDF("id_type")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$path/meta")
+    IndexLifecycle.writeParams(
+      Seq(Tuple1(labels.schema("id").dataType.typeName)).toDF("id_type"), s"$path/meta")
   }
 
-  private def componentsMeta(spark: org.apache.spark.sql.SparkSession,
-                             path: String, what: String): String = {
-    val rows =
-      try spark.read.parquet(s"$path/meta").select("id_type").collect()
-      catch { case e: org.apache.spark.sql.AnalysisException =>
-        throw new IllegalArgumentException(
-          s"$what: $path is not a component index (missing meta sidecar): " +
-            e.getMessage)
-      }
-    require(rows.length == 1, s"$what: $path has a malformed meta sidecar")
-    rows.head.getString(0)
-  }
+  /** The component index's id type, from its `meta` sidecar. */
+  private def componentsIdType(spark: org.apache.spark.sql.SparkSession,
+                               path: String, what: String): String =
+    IndexLifecycle.readParams(spark, s"$path/meta", Seq("id_type"), what)(
+      IndexLifecycle.notAnIndex(what, path, "component")).head.getString(0)
 
   /** The resolved relabel map as a DataFrame (__from, __to): merge-event
     * rows with their chains followed to the final root, DISTRIBUTED (r17,
@@ -851,23 +836,16 @@ object Dedup {
     * contracted CC, append labels for NEW ids and relabel rows for
     * merged old roots. Returns (newIds, mergeEvents).
     *
-    * `batchTag` makes the append EXACTLY-ONCE (r17, VERDICT r16 §next-3):
-    * label/relabel rows are additive, so a foreachBatch crash-replay
-    * would duplicate label rows and double-record merges. Pass the
-    * stream's batch id; a committed (tag, content) replays as a no-op
-    * returning (0, 0), a colliding tag with different content fails
-    * loudly, and a crash between the labels and relabels writes replays
-    * to exactly one committed copy of both — the replay FIRST removes
-    * the crashed attempt's partial files, so its recomputation reads the
-    * same pre-batch state the crashed attempt saw
-    * ([[graft.pipeline.BatchAppend]]).
+    * `batchTag` makes the append exactly-once ([[IndexLifecycle.append]];
+    * a committed replay returns (0, 0)): label/relabel rows are additive,
+    * so a replay would duplicate label rows and double-record merges.
     */
   def componentsAppendIndex(newPairs0: DataFrame, path: String,
                             maxIter: Int = 20,
                             localEdgeLimit: Long = 1L << 20,
                             batchTag: Option[String] = None): (Long, Long) = {
     val spark = newPairs0.sparkSession
-    val idType = componentsMeta(spark, path, "componentsAppendIndex")
+    val idType = componentsIdType(spark, path, "componentsAppendIndex")
     // Match the stored key type up front (ADVICE r16): integral indexes
     // store LONG labels (duplicateGroups' normalization), so integral
     // batch ids WIDEN to long here — appending them raw would write
@@ -933,33 +911,19 @@ object Dedup {
         .localCheckpoint(true)
       (newIds, merges)
     }
-    batchTag match {
-      case None =>
-        val (newIds, merges) = compute()
-        val nNew = newIds.count()
-        val nMerge = merges.count()
-        if (nNew > 0)
-          newIds.write.mode(org.apache.spark.sql.SaveMode.Append)
-            .parquet(s"$path/labels")
-        if (nMerge > 0)
-          merges.write.mode(org.apache.spark.sql.SaveMode.Append)
-            .parquet(s"$path/relabels")
-        (nNew, nMerge)
-      case Some(tag) =>
-        var out = (0L, 0L) // a replayed committed batch appends nothing new
-        // the rows are checkpointed joins of the batch with the stored
-        // labels, so the signature is computed by its own job
-        graft.pipeline.BatchAppend.exactlyOnce(path, tag, newPairs,
-          Seq("id_a", "id_b"), Seq(s"$path/labels", s"$path/relabels")) { c =>
-          val (newIds, merges) = compute()
-          val nNew = newIds.count()
-          val nMerge = merges.count()
-          if (nNew > 0) c.append(newIds, s"$path/labels")
-          if (nMerge > 0) c.append(merges, s"$path/relabels")
-          out = (nNew, nMerge)
-        }
-        out
+    var out = (0L, 0L) // a replayed committed batch appends nothing new
+    // the rows are checkpointed joins of the batch with the stored labels,
+    // so a tagged batch's signature is computed by its own job
+    IndexLifecycle.append(path, batchTag, newPairs, Seq("id_a", "id_b"),
+      Seq(s"$path/labels", s"$path/relabels")) { c =>
+      val (newIds, merges) = compute()
+      val nNew = newIds.count()
+      val nMerge = merges.count()
+      if (nNew > 0) c.append(newIds, s"$path/labels")
+      if (nMerge > 0) c.append(merges, s"$path/relabels")
+      out = (nNew, nMerge)
     }
+    out
   }
 
   /** The fully-resolved (id, group_id) view: base labels composed with
@@ -968,7 +932,7 @@ object Dedup {
     */
   def componentsIndexedGroups(spark: org.apache.spark.sql.SparkSession,
                               path: String): DataFrame = {
-    componentsMeta(spark, path, "componentsIndexedGroups")
+    componentsIdType(spark, path, "componentsIndexedGroups")
     val base = spark.read.parquet(s"$path/labels")
     val rl = resolvedRelabels(spark, path, base)
     base.join(rl, col("group_id") === col("__from"), "left")
@@ -982,7 +946,7 @@ object Dedup {
     */
   def componentsCompactIndex(spark: org.apache.spark.sql.SparkSession,
                              path: String): Long = {
-    componentsMeta(spark, path, "componentsCompactIndex")
+    componentsIdType(spark, path, "componentsCompactIndex")
     val resolved = componentsIndexedGroups(spark, path)
     val n = graft.pipeline.Sinks.overwriteViaStaging(resolved,
       s"$path/labels")
@@ -1007,7 +971,7 @@ object Dedup {
                              maxRelabels: Long = 1000000L): Boolean = {
     require(maxRelabels >= 0,
       s"componentsMaybeCompact: maxRelabels >= 0, got $maxRelabels")
-    componentsMeta(spark, path, "componentsMaybeCompact")
+    componentsIdType(spark, path, "componentsMaybeCompact")
     val rl = s"$path/relabels"
     val n =
       if (graft.pipeline.Sinks.exists(spark, rl))
@@ -1337,22 +1301,14 @@ object Dedup {
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(s"$path/fps")
     import spark.implicits._
-    Seq(minTokens).toDF("min_tokens")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$path/meta")
+    IndexLifecycle.writeParams(Seq(minTokens).toDF("min_tokens"), s"$path/meta")
   }
 
-  private def substringIndexMeta(spark: org.apache.spark.sql.SparkSession,
-                                 path: String, what: String): Int = {
-    val meta = try spark.read.parquet(s"$path/meta") catch {
-      case e: Exception => throw new IllegalArgumentException(
-        s"$what: $path is not a substring index (missing meta sidecar): " +
-          e.getMessage)
-    }
-    require(meta.columns.contains("min_tokens"),
-      s"$what: $path is not a substring index (meta lacks min_tokens)")
-    meta.select("min_tokens").head().getInt(0)
-  }
+  /** The substring index's window width, from its `meta` sidecar. */
+  private def substringMinTokens(spark: org.apache.spark.sql.SparkSession,
+                                 path: String, what: String): Int =
+    IndexLifecycle.readParams(spark, s"$path/meta", Seq("min_tokens"), what)(
+      IndexLifecycle.notAnIndex(what, path, "substring")).head.getInt(0)
 
   /** Fold a new batch's window fingerprints into a persisted substring
     * index — O(batch): the batch's per-fp counts APPEND as partial-count
@@ -1360,30 +1316,20 @@ object Dedup {
     * across appends — Σ partial rows per fp is the true count), so the
     * existing index is never rewritten. The window width comes from the
     * index's own meta, so an appended batch cannot drift from the
-    * training parameter.
+    * training parameter. `batchTag` makes the append exactly-once
+    * ([[IndexLifecycle.append]]): a replay would double-count every window
+    * the batch contributed.
     */
   def substringAppendIndex(newDocs: DataFrame, idCol: String,
                            textCol: String, path: String,
                            batchTag: Option[String] = None): Unit = {
-    val k = substringIndexMeta(newDocs.sparkSession, path,
+    val k = substringMinTokens(newDocs.sparkSession, path,
       "substringAppendIndex")
-    def rows(docs: DataFrame) = substrWindows(docs, idCol, textCol, k)
-      .groupBy("__fp").agg(count(lit(1)).as("cnt"))
-      .select(col("__fp").as("fp"), col("cnt"))
-    batchTag match {
-      case None =>
-        rows(newDocs).write.mode(org.apache.spark.sql.SaveMode.Append)
-          .parquet(s"$path/fps")
-      case Some(tag) =>
-        // additive partial counts: a foreachBatch crash-replay would
-        // double-count every window the batch contributed (r17 —
-        // the cmsAppendIndex treatment); the rows are grouped above the
-        // batch, so the signature is computed by its own job
-        graft.pipeline.BatchAppend.exactlyOnce(path, tag, newDocs,
-          Seq(idCol, textCol), Seq(s"$path/fps")) { c =>
-          c.append(rows(c.frame), s"$path/fps")
-        }: Unit
-    }
+    IndexLifecycle.append(path, batchTag, newDocs, Seq(idCol, textCol), Seq(s"$path/fps")) { c =>
+      c.append(substrWindows(c.frame, idCol, textCol, k)
+        .groupBy("__fp").agg(count(lit(1)).as("cnt"))
+        .select(col("__fp").as("fp"), col("cnt")), s"$path/fps")
+    }: Unit
   }
 
   /** Compact a persisted substring index's per-batch partial counts
@@ -1395,7 +1341,7 @@ object Dedup {
     */
   def substringCompactIndex(spark: org.apache.spark.sql.SparkSession,
                             path: String): Long = {
-    substringIndexMeta(spark, path, "substringCompactIndex")
+    substringMinTokens(spark, path, "substringCompactIndex")
     graft.pipeline.Sinks.compactAdditive(spark, s"$path/fps",
       Seq("fp"), Seq("cnt"))
   }
@@ -1413,7 +1359,7 @@ object Dedup {
   def substringProbeIndex(spark: org.apache.spark.sql.SparkSession,
                           path: String, newDocs: DataFrame, idCol: String,
                           textCol: String): DataFrame = {
-    val k = substringIndexMeta(spark, path, "substringProbeIndex")
+    val k = substringMinTokens(spark, path, "substringProbeIndex")
     val idx = spark.read.parquet(s"$path/fps")
     require(idx.columns.contains("fp"),
       s"substringProbeIndex: $path is not a substring index (want fp column)")
@@ -1798,33 +1744,23 @@ object Dedup {
     // prefix hides it from the signature scan.
     val spark = df.sparkSession
     import spark.implicits._
-    Seq((shingleN, bands, rowsPerBand))
-      .toDF("shingle_n", "bands", "rows_per_band")
-      .coalesce(1)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$path/_meta")
+    IndexLifecycle.writeParams(Seq((shingleN, bands, rowsPerBand))
+      .toDF("shingle_n", "bands", "rows_per_band"), s"$path/_meta")
   }
 
-  /** The index's `_meta` parameters (shingleN, bands, rowsPerBand), read
-    * on the driver from the one-row sidecar ([[graft.pipeline.Sinks.driverRows]]).
-    * A missing or unreadable sidecar raises `IllegalStateException`; one
-    * holding other than one row is malformed.
+  /** The index's `_meta` parameters (shingleN, bands, rowsPerBand). The
+    * signatures live at the root, so a missing or unreadable sidecar is a
+    * broken index (`IllegalStateException`), not a wrong path.
     */
-  private def minHashIndexMeta(spark: org.apache.spark.sql.SparkSession,
-                               path: String, what: String)
+  private def minHashParams(spark: org.apache.spark.sql.SparkSession,
+                            path: String, what: String)
       : (Int, Int, Int) = {
-    val fields = Seq("shingle_n", "bands", "rows_per_band")
-    val rows =
-      try graft.pipeline.Sinks.driverRows(spark, s"$path/_meta")
-        .map(g => fields.map(f => g.getInteger(f, 0)))
-      catch {
-        case e @ (_: java.io.IOException | _: RuntimeException) =>
-          throw new IllegalStateException(
-            s"$what: $path has no readable parameters sidecar (_meta); " +
-              "rewrite the index with minHashWriteIndex", e)
-      }
-    require(rows.length == 1, s"$what: $path has a malformed _meta sidecar")
-    (rows.head(0), rows.head(1), rows.head(2))
+    val r = IndexLifecycle.readParams(spark, s"$path/_meta",
+      Seq("shingle_n", "bands", "rows_per_band"), what) { e =>
+      new IllegalStateException(s"$what: $path has no readable parameters sidecar " +
+        "(_meta); rewrite the index with minHashWriteIndex", e)
+    }.head
+    (r.getInt(0), r.getInt(1), r.getInt(2))
   }
 
   /** O(batch) MinHash index maintenance (late r17 — the verb the
@@ -1835,37 +1771,23 @@ object Dedup {
     * drop the near-duplicates, append the survivors — corpus text is
     * never re-read, the 100 TB operating mode.
     *
-    * `batchTag` makes the append EXACTLY-ONCE (the
-    * [[graft.operators.Similarity.ivfAppendIndex]] treatment): a
-    * crash-replayed batch would append duplicate signature rows —
-    * probes stay correct (the candidate pair set is distinct-ed) but
-    * every later probe pays the duplicated join rows and the index
-    * doubles silently. Committed (tag, content) replays no-op
-    * ([[graft.pipeline.BatchAppend]]). Only the branch that writes reads
-    * `_meta`: a first tagged commit is its one write (the batch signature
-    * is observed in that pass), a committed replay its marker listing and
-    * one signature job.
+    * `batchTag` makes the append exactly-once ([[IndexLifecycle.append]]):
+    * a replay would append duplicate signature rows — probes stay correct
+    * (the candidate pair set is distinct-ed) but every later probe pays the
+    * duplicated join rows and the index doubles silently. Only the branch
+    * that writes reads `_meta`.
     */
   def minHashAppendIndex(newDocs: DataFrame, idCol: String, textCol: String,
                          path: String,
                          batchTag: Option[String] = None): Unit = {
-    def rows(docs: DataFrame) = {
+    IndexLifecycle.append(path, batchTag, newDocs, Seq(idCol, textCol), Seq(path)) { c =>
       val (sn, bands, rpb) =
-        minHashIndexMeta(newDocs.sparkSession, path, "minHashAppendIndex")
-      docs.select(col(idCol).as("id"),
+        minHashParams(newDocs.sparkSession, path, "minHashAppendIndex")
+      c.append(c.frame.select(col(idCol).as("id"),
           graft.expressions.TextHashExpressions
             .minHashSignature(col(textCol), sn, bands * rpb).as("sig"))
-        .filter(col("sig").isNotNull)
-    }
-    batchTag match {
-      case None =>
-        rows(newDocs).write.mode(org.apache.spark.sql.SaveMode.Append).parquet(path)
-      case Some(tag) =>
-        graft.pipeline.BatchAppend.exactlyOnce(path, tag, newDocs,
-          Seq(idCol, textCol), Seq(path)) { c =>
-          c.append(rows(c.frame), path)
-        }: Unit
-    }
+        .filter(col("sig").isNotNull), path)
+    }: Unit
   }
 
   /** Probe NEW documents against a persisted MinHash index: new-side
@@ -1908,7 +1830,7 @@ object Dedup {
     // Indexes written before the sidecar existed skip the check (the
     // sig-length arithmetic below still catches a k mismatch).
     if (graft.pipeline.Sinks.exists(spark, s"$path/_meta")) {
-      val (sn, b, rpb) = minHashIndexMeta(spark, path, "minHashProbeIndex")
+      val (sn, b, rpb) = minHashParams(spark, path, "minHashProbeIndex")
       require(sn == shingleN && b == bands && rpb == rowsPerBand,
         s"minHashProbeIndex: probe parameters (shingleN=$shingleN, " +
           s"bands=$bands, rowsPerBand=$rowsPerBand) differ from the " +

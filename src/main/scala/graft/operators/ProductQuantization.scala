@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.expressions.VectorExpressions
+import graft.pipeline.IndexLifecycle
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -423,10 +424,11 @@ object ProductQuantization {
     * source-of-truth table `emb` — the same table the exact re-rank
     * stage reads on every probe. Retrains with the deterministic sampled
     * trainer, re-encodes everything, and swaps (codes + `_books`) in as
-    * ONE staged unit: code-identical to a fresh [[pqWriteIndex]] over
-    * `emb` (trainer determinism — the q_sim_pq_retrain_gate pin), but
-    * readers see the old index or the new, never the delete-then-write
-    * gap of a plain overwrite. SINGLE-WRITER maintenance.
+    * ONE staged unit ([[IndexLifecycle.rebuild]]): code-identical to a
+    * fresh [[pqWriteIndex]] over `emb` (trainer determinism — the
+    * q_sim_pq_retrain_gate pin), but readers see the old index or the
+    * new, never the delete-then-write gap of a plain overwrite.
+    * SINGLE-WRITER maintenance.
     */
   def pqRetrainCompact(emb0: DataFrame, idCol: String, vecCol: String,
                        dim: Int, path: String, m: Int = 8,
@@ -439,13 +441,10 @@ object ProductQuantization {
     val emb = graft.pipeline.Tombstones.exclude(emb0, path, idCol)
     val books = trainBooks(emb, idCol, vecCol, dim, m, kCodewords, maxIter,
       trainFraction)
-    graft.pipeline.Sinks.overwriteViaStagingWith(
-      encode(emb, idCol, vecCol, books), path) { staged =>
+    IndexLifecycle.rebuild(emb.sparkSession, path) { staged =>
+      encode(emb, idCol, vecCol, books).write.parquet(staged)
       writeBooksSidecar(emb.sparkSession, books, staged)
-      // exactly-once markers ride the swap (the ivfRetrainCompact note)
-      graft.pipeline.BatchAppend.preserveMarkers(emb.sparkSession, path,
-        staged)
-    }: Unit
+    }
   }
 
   /** Load the codebook sidecar written by [[pqWriteIndex]]. Selected by
@@ -479,26 +478,16 @@ object ProductQuantization {
     * — and append. O(batch) work per batch, no O(corpus) rebuild; the
     * daily-ingest story, same as [[Similarity.ivfAppendIndex]].
     *
-    * `batchTag` makes the append EXACTLY-ONCE (late r17 — the
-    * [[Similarity.ivfAppendIndex]] treatment): a crash-replayed batch
-    * would append the same codes twice, and a duplicated id fills two
-    * ADC top-k slots, silently displacing a true neighbor. Committed
-    * (tag, content) replays no-op; markers survive [[pqRetrainCompact]]'s
-    * staged swap ([[graft.pipeline.BatchAppend]]).
+    * `batchTag` makes the append exactly-once ([[IndexLifecycle.append]]):
+    * a replayed id would fill two ADC top-k slots, silently displacing a
+    * true neighbor.
     */
   def pqAppendIndex(emb: DataFrame, idCol: String, vecCol: String,
                     path: String, batchTag: Option[String] = None): Unit = {
     val books = pqReadBooks(emb.sparkSession, path)
-    batchTag match {
-      case None =>
-        encode(emb, idCol, vecCol, books)
-          .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(path)
-      case Some(tag) =>
-        graft.pipeline.BatchAppend.exactlyOnce(path, tag, emb,
-          Seq(idCol, vecCol), Seq(path)) { c =>
-          c.append(encode(c.frame, idCol, vecCol, books), path)
-        }: Unit
-    }
+    IndexLifecycle.append(path, batchTag, emb, Seq(idCol, vecCol), Seq(path)) { c =>
+      c.append(encode(c.frame, idCol, vecCol, books), path)
+    }: Unit
   }
 
   /** ADC top-k against a persisted PQ index: the scan reads codes only
@@ -585,24 +574,20 @@ object ProductQuantization {
     def rot(e: DataFrame) = e.filter(size(col(vecCol)) === model.dim)
       .select(col(idCol).as("id"),
         graft.operators.Pca.projectCol(col(vecCol), model).as("rvec"))
-    batchTag match {
-      case None => pqAppendIndex(rot(emb), "id", "rvec", path)
-      case Some(tag) =>
-        graft.pipeline.BatchAppend.exactlyOnce(path, tag, emb,
-          Seq(idCol, vecCol), Seq(path)) { c =>
-          val books = pqReadBooks(emb.sparkSession, path)
-          c.append(encode(rot(c.frame), "id", "rvec", books), path)
-        }: Unit
-    }
+    IndexLifecycle.append(path, batchTag, emb, Seq(idCol, vecCol), Seq(path)) { c =>
+      val books = pqReadBooks(emb.sparkSession, path)
+      c.append(encode(rot(c.frame), "id", "rvec", books), path)
+    }: Unit
   }
 
   /** [[pqRetrainCompact]] for the rotated family: retrain BOTH sidecars
     * — the full-rank PCA rotation and the codebooks trained in the new
     * rotated space — re-encode everything from the source-of-truth
     * `emb`, and swap (codes + `_books` + `_rotation`) as ONE staged
-    * unit. Both trainers are deterministic (driver-side sorted samples),
-    * so retrain-after-appends equals a fresh [[opqWriteIndex]] over the
-    * union code-for-code (gate-pinned). SINGLE-WRITER maintenance.
+    * unit ([[IndexLifecycle.rebuild]]). Both trainers are deterministic
+    * (driver-side sorted samples), so retrain-after-appends equals a
+    * fresh [[opqWriteIndex]] over the union code-for-code (gate-pinned).
+    * SINGLE-WRITER maintenance.
     */
   def opqRetrainCompact(emb0: DataFrame, idCol: String, vecCol: String,
                         dim: Int, path: String, m: Int = 8,
@@ -616,15 +601,12 @@ object ProductQuantization {
         graft.operators.Pca.projectCol(col(vecCol), model).as("rvec"))
     val books = trainBooks(rot, "id", "rvec", dim, m, kCodewords, maxIter,
       trainFraction)
-    graft.pipeline.Sinks.overwriteViaStagingWith(
-      encode(rot, "id", "rvec", books), path) { staged =>
+    IndexLifecycle.rebuild(emb.sparkSession, path) { staged =>
+      encode(rot, "id", "rvec", books).write.parquet(staged)
       writeBooksSidecar(emb.sparkSession, books, staged)
       graft.operators.Pca.writeModel(emb.sparkSession, model,
         s"$staged/_rotation")
-      // exactly-once markers ride the swap (the ivfRetrainCompact note)
-      graft.pipeline.BatchAppend.preserveMarkers(emb.sparkSession, path,
-        staged)
-    }: Unit
+    }
   }
 
   /** Rotate one query vector driver-side: `C·(q − mean)` — the probe's

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.pipeline.IndexLifecycle
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -132,40 +133,25 @@ object Profile {
       s"hllWriteIndex: lgK must be in [4, 21] (DataSketches bounds), got $lgK")
     keyCols.foreach(c => requireSketchable(df, c, "hllWriteIndex"))
     val spark = df.sparkSession
-    // ADVICE r15: create-over-existing silently destroyed the accumulated
-    // append history — inconsistent with the "mismatched append is
-    // structurally impossible" stance everywhere else in this file. An
-    // existing index (meta sidecar present) now fails loudly unless the
-    // caller opts into replacement.
-    require(overwrite || !graft.pipeline.Sinks.exists(spark, s"$path/meta"),
-      s"hllWriteIndex: an index already exists at $path — re-running the " +
-        "create step would destroy its accumulated append history. Use " +
-        "hllAppendIndex for new batches, or pass overwrite = true to " +
-        "rebuild deliberately")
+    IndexLifecycle.requireNew(spark, path, overwrite, "hllWriteIndex", "hllAppendIndex")
     sketchRows(df, keyCols, lgK)
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(s"$path/sketches")
     import spark.implicits._
-    keyCols.map(c => (lgK, c, df.schema(c).dataType.typeName))
-      .toDF("lg_k", "col_name", "col_type")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$path/meta")
+    IndexLifecycle.writeParams(keyCols.map(c => (lgK, c, df.schema(c).dataType.typeName))
+      .toDF("lg_k", "col_name", "col_type"), s"$path/meta")
   }
 
-  private def hllIndexMeta(spark: org.apache.spark.sql.SparkSession,
-                           path: String, what: String)
+  /** A sketch index's (precision, sorted (column, type) pairs) from its
+    * one-row-per-column `meta` sidecar — `lg_k` for HLL, `k` for KLL.
+    */
+  private def sketchIndexMeta(spark: org.apache.spark.sql.SparkSession, path: String,
+                              what: String, kind: String, precision: String)
       : (Int, Seq[(String, String)]) = {
-    val rows =
-      try spark.read.parquet(s"$path/meta")
-        .select("lg_k", "col_name", "col_type").collect()
-      catch { case e: org.apache.spark.sql.AnalysisException =>
-        throw new IllegalArgumentException(
-          s"$what: $path is not a sketch index (missing meta sidecar): " +
-            e.getMessage)
-      }
-    require(rows.nonEmpty, s"$what: $path has an empty meta sidecar")
-    (rows.head.getInt(0),
-      rows.map(r => (r.getString(1), r.getString(2))).toSeq.sortBy(_._1))
+    val rows = IndexLifecycle.readParams(spark, s"$path/meta",
+      Seq(precision, "col_name", "col_type"), what, single = false)(
+      IndexLifecycle.notAnIndex(what, path, kind))
+    (rows.head.getInt(0), rows.map(r => (r.getString(1), r.getString(2))).sortBy(_._1))
   }
 
   /** Append one ingest batch in O(batch): new additive sketch rows, no
@@ -176,7 +162,7 @@ object Profile {
     * loudly instead of silently fragmenting the distinct space.
     */
   def hllAppendIndex(df: DataFrame, path: String): Unit = {
-    val (lgK, cols) = hllIndexMeta(df.sparkSession, path, "hllAppendIndex")
+    val (lgK, cols) = sketchIndexMeta(df.sparkSession, path, "hllAppendIndex", "sketch", "lg_k")
     cols.foreach { case (c, t) =>
       requireSketchable(df, c, "hllAppendIndex")
       val actual = df.schema(c).dataType.typeName
@@ -207,7 +193,7 @@ object Profile {
     */
   def hllCompactIndex(spark: org.apache.spark.sql.SparkSession,
                       path: String): Long = {
-    hllIndexMeta(spark, path, "hllCompactIndex")
+    sketchIndexMeta(spark, path, "hllCompactIndex", "sketch", "lg_k")
     val grouped = spark.read.parquet(s"$path/sketches")
       .groupBy(col("col_name"))
       .agg(
@@ -366,21 +352,13 @@ object Profile {
       s"kllWriteIndex: k must be in [8, 65535], got $k")
     keyCols.foreach(c => requireIntegral(df, c, "kllWriteIndex"))
     val spark = df.sparkSession
-    // the hllWriteIndex guard (ADVICE r15): creating over an existing
-    // index destroys its append history — fail loudly unless opted in
-    require(overwrite || !graft.pipeline.Sinks.exists(spark, s"$path/meta"),
-      s"kllWriteIndex: an index already exists at $path — re-running the " +
-        "create step would destroy its accumulated append history. Use " +
-        "kllAppendIndex for new batches, or pass overwrite = true to " +
-        "rebuild deliberately")
+    IndexLifecycle.requireNew(spark, path, overwrite, "kllWriteIndex", "kllAppendIndex")
     kllSketchRows(df, keyCols, k)
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(s"$path/sketches")
     import spark.implicits._
-    keyCols.map(c => (k, c, df.schema(c).dataType.typeName))
-      .toDF("k", "col_name", "col_type")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$path/meta")
+    IndexLifecycle.writeParams(keyCols.map(c => (k, c, df.schema(c).dataType.typeName))
+      .toDF("k", "col_name", "col_type"), s"$path/meta")
   }
 
   private def requireIntegral(df: DataFrame, c: String, what: String): Unit = {
@@ -401,38 +379,19 @@ object Profile {
       .select(col("__p.*"))
   }
 
-  private def kllIndexMeta(spark: org.apache.spark.sql.SparkSession,
-                           path: String, what: String)
-      : (Int, Seq[(String, String)]) = {
-    val rows =
-      try spark.read.parquet(s"$path/meta")
-        .select("k", "col_name", "col_type").collect()
-      catch { case e: org.apache.spark.sql.AnalysisException =>
-        throw new IllegalArgumentException(
-          s"$what: $path is not a KLL index (missing meta sidecar): " +
-            e.getMessage)
-      }
-    require(rows.nonEmpty, s"$what: $path has an empty meta sidecar")
-    (rows.head.getInt(0),
-      rows.map(r => (r.getString(1), r.getString(2))).toSeq.sortBy(_._1))
-  }
-
   /** Append one batch's sketch rows in O(batch) — additive, no
     * read-modify-write; type drift fails loudly (the hllAppendIndex
     * contract).
     *
-    * `batchTag` makes the append EXACTLY-ONCE (r17, VERDICT r16 §next-3):
-    * KLL is additive (every retained item weighs), so a foreachBatch
-    * crash-replay would double-weight the batch and skew every later
-    * quantile. Pass the stream's batch id; a committed (tag, content)
-    * replays as a no-op, a colliding tag with different content fails
-    * loudly ([[graft.pipeline.BatchAppend]]). The HLL index needs no such
-    * guard — sketch union is idempotent (max of registers), so a replayed
-    * HLL row changes no estimate.
+    * `batchTag` makes the append exactly-once ([[IndexLifecycle.append]]):
+    * KLL is additive (every retained item weighs), so a replay would
+    * double-weight the batch and skew every later quantile. The HLL index
+    * needs no such guard — sketch union is idempotent (max of registers),
+    * so a replayed HLL row changes no estimate.
     */
   def kllAppendIndex(df: DataFrame, path: String,
                      batchTag: Option[String] = None): Unit = {
-    val (k, cols) = kllIndexMeta(df.sparkSession, path, "kllAppendIndex")
+    val (k, cols) = sketchIndexMeta(df.sparkSession, path, "kllAppendIndex", "KLL", "k")
     cols.foreach { case (c, t) =>
       requireIntegral(df, c, "kllAppendIndex")
       val actual = df.schema(c).dataType.typeName
@@ -440,17 +399,9 @@ object Profile {
         s"kllAppendIndex: column '$c' is $actual but the index profiled it " +
           s"as $t — a type-drifted append would corrupt the distribution")
     }
-    batchTag match {
-      case None =>
-        kllSketchRows(df, cols.map(_._1), k)
-          .write.mode(org.apache.spark.sql.SaveMode.Append)
-          .parquet(s"$path/sketches")
-      case Some(tag) =>
-        graft.pipeline.BatchAppend.exactlyOnce(path, tag, df, cols.map(_._1),
-          Seq(s"$path/sketches")) { c =>
-          c.append(kllSketchRows(c.frame, cols.map(_._1), k), s"$path/sketches")
-        }: Unit
-    }
+    IndexLifecycle.append(path, batchTag, df, cols.map(_._1), Seq(s"$path/sketches")) { c =>
+      c.append(kllSketchRows(c.frame, cols.map(_._1), k), s"$path/sketches")
+    }: Unit
   }
 
   /** Quantiles from the stored sketches alone: merge each column's shard
@@ -463,7 +414,7 @@ object Profile {
                         path: String, qs: Seq[Double]): DataFrame = {
     require(qs.nonEmpty && qs.forall(q => q >= 0.0 && q <= 1.0),
       s"kllQuantilesIndex: ranks must be in [0,1], got $qs")
-    kllIndexMeta(spark, path, "kllQuantilesIndex")
+    sketchIndexMeta(spark, path, "kllQuantilesIndex", "KLL", "k")
     import graft.expressions.KllExpressions._
     val merged = spark.read.parquet(s"$path/sketches")
       .groupBy(col("col_name"))
@@ -490,7 +441,7 @@ object Profile {
     */
   def hllEstimateIndex(spark: org.apache.spark.sql.SparkSession,
                        path: String): DataFrame = {
-    hllIndexMeta(spark, path, "hllEstimateIndex")
+    sketchIndexMeta(spark, path, "hllEstimateIndex", "sketch", "lg_k")
     spark.read.parquet(s"$path/sketches")
       .groupBy(col("col_name"))
       .agg(

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.pipeline.IndexLifecycle
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -220,33 +221,23 @@ object SemDedup {
     * [[dedupSemanticIndexed]] pass sees old+new rows under one partition
     * layout; no retrain, no rewrite, no re-vectorizing the corpus.
     *
-    * `batchTag` makes the append EXACTLY-ONCE (late r17 — the
-    * [[Similarity.ivfAppendIndex]] treatment): a crash-replayed batch
-    * duplicates vectors, and for SemDeDup a duplicated row is its own
-    * nearest within-cell neighbor at cosine 1.0 — it marks ITSELF a
-    * duplicate, silently deleting a unique document from the kept set.
-    * Committed (tag, content) replays no-op; markers survive
-    * [[semDedupRetrainCompact]]'s staged swap.
+    * `batchTag` makes the append exactly-once ([[IndexLifecycle.append]]):
+    * a replayed row is its own nearest within-cell neighbor at cosine 1.0
+    * — it marks ITSELF a duplicate, silently deleting a unique document
+    * from the kept set.
     */
   def semDedupAppendIndex(emb: DataFrame, idCol: String, vecCol: String,
                           path: String,
                           batchTag: Option[String] = None): Unit = {
     val cents = readIndexCentroids(emb.sparkSession, path)
     val dim = cents.head.length
-    def rows(e: DataFrame) = Similarity.quantizeEmbeddings(
-        e.filter(size(col(vecCol)) === dim), idCol, vecCol)
-      .select(col("id"), col("qvec"),
-        Similarity.ivfAssignTo(col("qvec"), cents).as("cell"))
-    batchTag match {
-      case None =>
-        rows(emb).write.mode(org.apache.spark.sql.SaveMode.Append)
-          .partitionBy("cell").parquet(path)
-      case Some(tag) =>
-        graft.pipeline.BatchAppend.exactlyOnce(path, tag, emb,
-          Seq(idCol, vecCol), Seq(path)) { c =>
-          c.append(rows(c.frame), path, partitionBy = Seq("cell"))
-        }: Unit
-    }
+    IndexLifecycle.append(path, batchTag, emb, Seq(idCol, vecCol), Seq(path)) { c =>
+      c.append(Similarity.quantizeEmbeddings(
+          c.frame.filter(size(col(vecCol)) === dim), idCol, vecCol)
+        .select(col("id"), col("qvec"),
+          Similarity.ivfAssignTo(col("qvec"), cents).as("cell")),
+        path, partitionBy = Seq("cell"))
+    }: Unit
   }
 
   /** Retrain-recluster compaction (r17 — the
@@ -257,9 +248,9 @@ object SemDedup {
     * SURVIVE silently (spec-pinned with a planted boundary-pair
     * fixture). Retrains on the stored quantized vectors with the
     * deterministic sampled trainer, reassigns every row, and swaps the
-    * cells + `_centroids` sidecar as ONE staged unit. `nCentroids = 0`
-    * keeps the stored cell count. SINGLE-WRITER maintenance, like every
-    * staged-swap compaction.
+    * cells + `_centroids` sidecar as ONE staged unit
+    * ([[IndexLifecycle.rebuild]]). `nCentroids = 0` keeps the stored cell
+    * count. SINGLE-WRITER maintenance, like every staged-swap compaction.
     */
   def semDedupRetrainCompact(spark: org.apache.spark.sql.SparkSession,
                              path: String, nCentroids: Int = 0,
@@ -274,14 +265,11 @@ object SemDedup {
       spark.read.parquet(path), path).select(col("id"), col("qvec"))
     val cents = Similarity.kMeansCentroidsSampled(rows, "id", "qvec", dim,
       k, sampleFraction, maxIter, maxSampleRows = maxSampleRows)
-    val reassigned = rows.select(col("id"), col("qvec"),
-      Similarity.ivfAssignTo(col("qvec"), cents).as("cell"))
-    graft.pipeline.Sinks.overwriteViaStagingWith(reassigned, path,
-      Seq("cell")) { staged =>
+    IndexLifecycle.rebuild(spark, path) { staged =>
+      rows.select(col("id"), col("qvec"), Similarity.ivfAssignTo(col("qvec"), cents).as("cell"))
+        .write.partitionBy("cell").parquet(staged)
       Similarity.writeCentroidSidecar(spark, cents, staged)
-      // exactly-once markers ride the swap (the ivfRetrainCompact note)
-      graft.pipeline.BatchAppend.preserveMarkers(spark, path, staged)
-    }: Unit
+    }
   }
 
   /** Load the centroid sidecar of a SemDeDup index — the shared

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.pipeline.IndexLifecycle
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -618,34 +619,17 @@ object Similarity {
     * daily-ingest corpus needs: O(batch) work per batch, no O(corpus)
     * rebuild.
     *
-    * `batchTag` makes the append EXACTLY-ONCE (late r17 — the
-    * [[graft.operators.Skew.cmsAppendIndex]] treatment for the ROW-append
-    * families): hosted in `foreachBatch`, a crash-replayed batch would
-    * append the same vectors twice, and duplicate corpus rows silently
-    * corrupt every later probe — the same id occupies two of the top-k
-    * slots, displacing a true neighbor, with no error anywhere. Pass the
-    * stream's batch id; a committed (tag, content) replays as a no-op, a
-    * colliding tag with different content fails loudly
-    * ([[graft.pipeline.BatchAppend]]). Markers survive
-    * [[ivfRetrainCompact]]'s staged swap, so a replay arriving after a
-    * retrain still no-ops instead of re-appending rows the retrain
-    * already folded in.
+    * `batchTag` makes the append exactly-once ([[IndexLifecycle.append]]):
+    * a replay would append the same vectors twice, and the same id would
+    * occupy two top-k slots, silently displacing a true neighbor.
     */
   def ivfAppendIndex(emb: DataFrame, idCol: String, vecCol: String,
                      path: String, batchTag: Option[String] = None): Unit = {
     val cents = ivfReadCentroids(emb.sparkSession, path)
-    def rows(e: DataFrame) = e.select(col(idCol).as("id"), col(vecCol).as("v"),
-      ivfAssignTo(col(vecCol), cents).as("cell"))
-    batchTag match {
-      case None =>
-        rows(emb).write.mode(org.apache.spark.sql.SaveMode.Append)
-          .partitionBy("cell").parquet(path)
-      case Some(tag) =>
-        graft.pipeline.BatchAppend.exactlyOnce(path, tag, emb,
-          Seq(idCol, vecCol), Seq(path)) { c =>
-          c.append(rows(c.frame), path, partitionBy = Seq("cell"))
-        }: Unit
-    }
+    IndexLifecycle.append(path, batchTag, emb, Seq(idCol, vecCol), Seq(path)) { c =>
+      c.append(c.frame.select(col(idCol).as("id"), col(vecCol).as("v"),
+        ivfAssignTo(col(vecCol), cents).as("cell")), path, partitionBy = Seq("cell"))
+    }: Unit
   }
 
   /** Load the centroid sidecar written by [[ivfWriteIndex]]. Columns are
@@ -824,9 +808,8 @@ object Similarity {
     * trainer — same sampling, same init, same update rule as a fresh
     * build, so retrain-after-appends and rebuild-from-the-union train
     * IDENTICAL centroids on identical rows), reassign every row, and swap
-    * the rebuilt cells + centroid sidecar in as ONE staged unit (readers
-    * see the old index or the new, never a half state — the
-    * overwriteViaStaging contract). `nCentroids = 0` keeps the stored
+    * the rebuilt cells + centroid sidecar in as ONE staged unit
+    * ([[IndexLifecycle.rebuild]]). `nCentroids = 0` keeps the stored
     * cell count. SINGLE-WRITER maintenance, like every staged-swap
     * compaction: run it from the loop that owns appends.
     */
@@ -853,14 +836,10 @@ object Similarity {
         centroids
       } else kMeansCentroidsSampled(rows, "id", "v", dim, k,
         sampleFraction, maxSampleRows = maxSampleRows)
-    val reassigned = rows.select(col("id"), col("v"),
-      ivfAssignTo(col("v"), cents).as("cell"))
-    graft.pipeline.Sinks.overwriteViaStagingWith(reassigned, path,
-      Seq("cell")) { staged =>
+    IndexLifecycle.rebuild(spark, path) { staged =>
+      rows.select(col("id"), col("v"), ivfAssignTo(col("v"), cents).as("cell"))
+        .write.partitionBy("cell").parquet(staged)
       writeCentroidSidecar(spark, cents, staged)
-      // exactly-once markers ride the swap: a batch the retrain folded in
-      // must still read as committed afterwards, or its replay re-appends
-      graft.pipeline.BatchAppend.preserveMarkers(spark, path, staged)
     }
   }
 

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.Money
+import graft.pipeline.IndexLifecycle
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -210,34 +211,22 @@ object Skew {
       s"cmsWriteIndex: confidence in (0,1), got $confidence")
     requireIntegralKey(df, keyCol, "cmsWriteIndex")
     val spark = df.sparkSession
-    require(overwrite || !graft.pipeline.Sinks.exists(spark, s"$path/meta"),
-      s"cmsWriteIndex: an index already exists at $path — re-running the " +
-        "create step would destroy its accumulated append history. Use " +
-        "cmsAppendIndex for new batches, or pass overwrite = true to " +
-        "rebuild deliberately")
+    IndexLifecycle.requireNew(spark, path, overwrite, "cmsWriteIndex", "cmsAppendIndex")
     cmsSketchRow(df, keyCol, eps, confidence, seed)
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(s"$path/sketches")
     import spark.implicits._
-    Seq((eps, confidence, seed, keyCol, df.schema(keyCol).dataType.typeName))
-      .toDF("eps", "confidence", "seed", "col_name", "col_type")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$path/meta")
+    IndexLifecycle.writeParams(
+      Seq((eps, confidence, seed, keyCol, df.schema(keyCol).dataType.typeName))
+        .toDF("eps", "confidence", "seed", "col_name", "col_type"), s"$path/meta")
   }
 
-  private def cmsIndexMeta(spark: org.apache.spark.sql.SparkSession,
-                           path: String, what: String)
+  private def cmsParams(spark: org.apache.spark.sql.SparkSession,
+                        path: String, what: String)
       : (Double, Double, Int, String, String) = {
-    val rows =
-      try spark.read.parquet(s"$path/meta")
-        .select("eps", "confidence", "seed", "col_name", "col_type").collect()
-      catch { case e: org.apache.spark.sql.AnalysisException =>
-        throw new IllegalArgumentException(
-          s"$what: $path is not a CMS index (missing meta sidecar): " +
-            e.getMessage)
-      }
-    require(rows.length == 1, s"$what: $path has a malformed meta sidecar")
-    val r = rows.head
+    val r = IndexLifecycle.readParams(spark, s"$path/meta",
+      Seq("eps", "confidence", "seed", "col_name", "col_type"), what)(
+      IndexLifecycle.notAnIndex(what, path, "CMS")).head
     (r.getDouble(0), r.getDouble(1), r.getInt(2), r.getString(3),
       r.getString(4))
   }
@@ -247,35 +236,22 @@ object Skew {
     * type-drifted key column fails loudly (a long 42 and an int 42 hash
     * to different CMS cells via the JVM value).
     *
-    * `batchTag` makes the append EXACTLY-ONCE (r17, VERDICT r16 §next-3):
-    * CMS is additive, so a foreachBatch crash-replay would double-append
-    * and silently inflate every later estimate. Pass the stream's batch
-    * id; a committed (tag, content) replays as a no-op, a colliding tag
-    * with different content fails loudly, and every crash point converges
-    * to one committed copy ([[graft.pipeline.BatchAppend]]). Untagged
-    * appends keep the plain additive semantics for single-shot callers.
+    * `batchTag` makes the append exactly-once ([[IndexLifecycle.append]]):
+    * CMS is additive, so a replay would silently inflate every later
+    * estimate.
     */
   def cmsAppendIndex(df: DataFrame, path: String,
                      batchTag: Option[String] = None): Unit = {
     val (eps, conf, seed, keyCol, tpe) =
-      cmsIndexMeta(df.sparkSession, path, "cmsAppendIndex")
+      cmsParams(df.sparkSession, path, "cmsAppendIndex")
     requireIntegralKey(df, keyCol, "cmsAppendIndex")
     val actual = df.schema(keyCol).dataType.typeName
     require(actual == tpe,
       s"cmsAppendIndex: column '$keyCol' is $actual but the index counts " +
         s"it as $tpe — a type-drifted append would fragment the key space")
-    batchTag match {
-      case None =>
-        cmsSketchRow(df, keyCol, eps, conf, seed)
-          .write.mode(org.apache.spark.sql.SaveMode.Append)
-          .parquet(s"$path/sketches")
-      case Some(tag) =>
-        graft.pipeline.BatchAppend.exactlyOnce(path, tag, df, Seq(keyCol),
-          Seq(s"$path/sketches")) { c =>
-          c.append(cmsSketchRow(c.frame, keyCol, eps, conf, seed),
-            s"$path/sketches")
-        }: Unit
-    }
+    IndexLifecycle.append(path, batchTag, df, Seq(keyCol), Seq(s"$path/sketches")) { c =>
+      c.append(cmsSketchRow(c.frame, keyCol, eps, conf, seed), s"$path/sketches")
+    }: Unit
   }
 
   /** Frequency estimates for bounded `candidates` from the stored
@@ -289,7 +265,7 @@ object Skew {
   def cmsEstimateIndex(spark: org.apache.spark.sql.SparkSession,
                        path: String, candidates: DataFrame,
                        candKeyCol: String): DataFrame = {
-    cmsIndexMeta(spark, path, "cmsEstimateIndex")
+    cmsParams(spark, path, "cmsEstimateIndex")
     val rows = spark.read.parquet(s"$path/sketches")
       .select("sk").collect()
       .flatMap(r => Option(r.getAs[Array[Byte]](0)))
@@ -318,7 +294,7 @@ object Skew {
     */
   def cmsCompactIndex(spark: org.apache.spark.sql.SparkSession,
                       path: String): Long = {
-    cmsIndexMeta(spark, path, "cmsCompactIndex")
+    cmsParams(spark, path, "cmsCompactIndex")
     val src = spark.read.parquet(s"$path/sketches")
     val rows = src.select("n_values", "sk").collect()
     val merged = rows.flatMap(r => Option(r.getAs[Array[Byte]](1)))

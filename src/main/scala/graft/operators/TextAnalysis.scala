@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.pipeline.IndexLifecycle
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -738,8 +739,10 @@ object TextAnalysis {
   def bm25WriteIndex(docs: DataFrame, idCol: String, textCol: String,
                      path: String, nBuckets: Int = 64): Unit = {
     require(nBuckets > 0, s"bm25WriteIndex: nBuckets must be > 0, got $nBuckets")
-    bm25IndexBatch(docs, idCol, textCol, path, nBuckets,
-      org.apache.spark.sql.SaveMode.Overwrite)
+    bm25IndexBatch(docs, idCol, textCol, nBuckets) { (df, sub, parts) =>
+      df.write.mode(org.apache.spark.sql.SaveMode.Overwrite).partitionBy(parts: _*)
+        .parquet(s"$path/$sub")
+    }
   }
 
   /** Incremental maintenance: append a new document batch into an existing
@@ -747,47 +750,29 @@ object TextAnalysis {
     * their bucket directories; df and corpus stats append as PARTIALS that
     * every probe sums, so nothing corpus-wide is read back or rewritten.
     * Caller contract (shared with every dedup/ANN index here): batch doc
-    * ids must not collide with ids already indexed.
-    */
-  /** `batchTag` makes the append EXACTLY-ONCE (r17): postings, dfreq
-    * partials, and the stats row are all additive, so a foreachBatch
-    * crash-replay would double-count the batch into every later score.
-    * Committed (tag, content) replays as a no-op across ALL THREE dirs; a
-    * crash between them replays to exactly one committed copy of each
-    * ([[graft.pipeline.BatchAppend]] — the partitioned form for the
-    * bucketed postings/terms).
+    * ids must not collide with ids already indexed. `batchTag` makes the
+    * append exactly-once across all three dirs ([[IndexLifecycle.append]]):
+    * postings, dfreq partials and the stats row are all additive, so a
+    * replay would double-count the batch into every later score.
     */
   def bm25AppendIndex(docs: DataFrame, idCol: String, textCol: String,
                       path: String, batchTag: Option[String] = None): Unit = {
-    val spark = docs.sparkSession
-    val nBuckets = bm25ReadNBuckets(spark, path)
-    batchTag match {
-      case None => bm25IndexBatch(docs, idCol, textCol, path, nBuckets,
-        org.apache.spark.sql.SaveMode.Append)
-      case Some(tag) =>
-        graft.pipeline.BatchAppend.exactlyOnce(path, tag, docs,
-          Seq(idCol, textCol),
-          Seq(s"$path/postings", s"$path/terms", s"$path/stats")) { c =>
-          bm25IndexBatch(c.frame, idCol, textCol, path, nBuckets,
-            org.apache.spark.sql.SaveMode.Append, commit = Some(c))
-        }: Unit
-    }
+    val nBuckets = bm25ReadNBuckets(docs.sparkSession, path)
+    IndexLifecycle.append(path, batchTag, docs, Seq(idCol, textCol),
+      Seq(s"$path/postings", s"$path/terms", s"$path/stats")) { c =>
+      bm25IndexBatch(c.frame, idCol, textCol, nBuckets) { (df, sub, parts) =>
+        c.append(df, s"$path/$sub", parts)
+      }
+    }: Unit
   }
 
+  /** One batch's postings, dfreq partials and stats row, each handed to
+    * `write` as (rows, subdirectory, partition columns).
+    */
   private def bm25IndexBatch(docs: DataFrame, idCol: String, textCol: String,
-                             path: String, nBuckets: Int,
-                             mode: org.apache.spark.sql.SaveMode,
-                             commit: Option[graft.pipeline.BatchAppend.Commit] = None): Unit = {
-    val spark = docs.sparkSession
+                             nBuckets: Int)
+                            (write: (DataFrame, String, Seq[String]) => Unit): Unit = {
     val bucket = pmod(xxhash64(col("term")), lit(nBuckets.toLong)).cast("int")
-    def write(df: DataFrame, sub: String, parts: Seq[String]): Unit =
-      commit match {
-        case Some(c) => c.append(df, s"$path/$sub", parts)
-        case None =>
-          val w = df.write.mode(mode)
-          (if (parts.nonEmpty) w.partitionBy(parts: _*) else w)
-            .parquet(s"$path/$sub")
-      }
     val p = bm25PostingRows(docs, idCol, textCol, withPositions = true)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -807,7 +792,9 @@ object TextAnalysis {
   /** DELETE documents from a persisted BM25 index (late r17 — the
     * takedown verb): O(one postings pass per delete batch) at delete
     * time, query-proportional work per probe. Three coordinated
-    * tables, all under one exactly-once marker when `batchTag` is set:
+    * tables, all under one exactly-once marker when `batchTag` is set
+    * ([[IndexLifecycle.append]], tags namespaced `del-` like
+    * [[graft.pipeline.Tombstones.delete]]):
     *
     *   - `_tombstones/` (id): probes anti-join postings against them
     *     (bucket-pruned — the join cost follows the query);
@@ -849,25 +836,15 @@ object TextAnalysis {
       .agg(sum("tf").as("dl"))
     val termsDir = s"$path/_deleted_terms"
     val statsDir = s"$path/_deleted_stats"
-    batchTag match {
-      case None =>
-        deadTerms.write.mode(org.apache.spark.sql.SaveMode.Append)
-          .partitionBy("bucket").parquet(termsDir)
-        deadStats.write.mode(org.apache.spark.sql.SaveMode.Append)
-          .parquet(statsDir)
-        graft.pipeline.Tombstones.delete(doomed, "id", path)
-      case Some(tag0) =>
-        val tag = s"del-$tag0"
-        // the rows join and group the ids, so the signature is computed
-        // by its own job
-        val tombs = graft.pipeline.Tombstones.tombstonePath(path)
-        graft.pipeline.BatchAppend.exactlyOnce(path, tag, ids, Seq(idCol),
-          Seq(tombs, termsDir, statsDir)) { c =>
-          c.append(deadTerms, termsDir, Seq("bucket"))
-          c.append(deadStats, statsDir)
-          c.append(doomed, tombs)
-        }: Unit
-    }
+    val tombs = graft.pipeline.Tombstones.tombstonePath(path)
+    // the rows join and group the ids, so a tagged batch's signature is
+    // computed by its own job
+    IndexLifecycle.append(path, batchTag.map(t => s"del-$t"), ids, Seq(idCol),
+      Seq(tombs, termsDir, statsDir)) { c =>
+      c.append(deadTerms, termsDir, Seq("bucket"))
+      c.append(deadStats, statsDir)
+      c.append(doomed, tombs)
+    }: Unit
   }
 
   /** Compact a persisted BM25 index's per-batch partials (r14, VERDICT
@@ -889,8 +866,8 @@ object TextAnalysis {
     * a crash CONVERGE: any multi-table sequence leaves a window where a
     * re-run would double-apply corrections, but here a crash before the
     * rename changes nothing and a re-run recomputes from the intact old
-    * root. Exactly-once markers ride the swap, so a replayed delete (or
-    * append) arriving after the compaction still no-ops.
+    * root ([[IndexLifecycle.rebuild]], which carries the exactly-once
+    * markers, so a replayed delete or append still no-ops).
     */
   def bm25CompactIndex(spark: org.apache.spark.sql.SparkSession,
                        path: String, targetFileMB: Int = 128): Unit =
@@ -906,7 +883,7 @@ object TextAnalysis {
         val nBuckets = bm25ReadNBuckets(spark, path)
         val live = graft.pipeline.Tombstones.exclude(
           spark.read.parquet(s"$path/postings"), path)
-        graft.pipeline.Sinks.swapStagedRoot(spark, path) { staged =>
+        IndexLifecycle.rebuild(spark, path) { staged =>
           live.write.partitionBy("bucket").parquet(s"$staged/postings")
           val lp = spark.read.parquet(s"$staged/postings")
           lp.groupBy("term", "bucket").agg(count(lit(1)).as("dfreq"))
@@ -916,7 +893,6 @@ object TextAnalysis {
               coalesce(sum("tf"), lit(0L)).as("total_dl"))
             .withColumn("n_buckets", lit(nBuckets))
             .coalesce(1).write.parquet(s"$staged/stats")
-          graft.pipeline.BatchAppend.preserveMarkers(spark, path, staged)
         }
     }
 

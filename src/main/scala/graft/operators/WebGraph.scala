@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.pipeline.IndexLifecycle
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -887,25 +888,19 @@ object WebGraph {
         col("weight").cast("long").as("weight"))
       .write.mode("overwrite").parquet(s"$path/edges")
 
-  /** Append a batch's host-pair counts as additive partial rows. */
-  /** `batchTag` makes the append EXACTLY-ONCE (r17): edge weights are
-    * additive partials, so a foreachBatch crash-replay would double a
-    * batch's weights into every later rank. Committed (tag, content)
-    * replays as a no-op; a colliding tag with different content fails
-    * loudly ([[graft.pipeline.BatchAppend]]).
+  /** Append a batch's host-pair counts as additive partial rows.
+    * `batchTag` makes the append exactly-once ([[IndexLifecycle.append]]):
+    * edge weights are additive partials, so a replay would double a
+    * batch's weights into every later rank.
     */
   def appendIndex(edges: DataFrame, path: String,
                   batchTag: Option[String] = None): Unit = {
     val rows = edges.select(col("src_host"), col("dst_host"),
       col("weight").cast("long").as("weight"))
-    batchTag match {
-      case None => rows.write.mode("append").parquet(s"$path/edges")
-      case Some(tag) =>
-        graft.pipeline.BatchAppend.exactlyOnce(path, tag, rows,
-          Seq("src_host", "dst_host", "weight"), Seq(s"$path/edges")) { c =>
-          c.append(c.frame, s"$path/edges")
-        }: Unit
-    }
+    IndexLifecycle.append(path, batchTag, rows, Seq("src_host", "dst_host", "weight"),
+      Seq(s"$path/edges")) { c =>
+      c.append(c.frame, s"$path/edges")
+    }: Unit
   }
 
   /** Compact the persisted graph's per-batch edge partials into one row

@@ -4,49 +4,13 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Exactly-once appends for the ADDITIVE index families (r17, VERDICT r16
-  * §next-3: CMS / KLL sketch rows, connected-component label/relabel
-  * rows). Hosted in `foreachBatch`, every side effect is AT-LEAST-ONCE —
-  * after a crash the engine replays the last batch id — and because these
-  * families are additive (unlike HLL/theta, which survive replay by max
-  * semantics), a double-appended batch silently INFLATES every later
-  * estimate. This is the `_manifest2` per-batch-marker protocol of
-  * [[graft.streaming.Streams.dedupAgainstIndexEachBatch]] re-shaped for
-  * flat (non-batch-partitioned) index directories:
-  *
-  *   - marker `<indexRoot>/_committed/<tag>-<sig>` present → the batch is
-  *     durable; the append is a NO-OP (the replay case).
-  *   - a marker for `<tag>` with a DIFFERENT content signature → loud
-  *     lineage error (a stream restarted from a lost/reset checkpoint
-  *     renumbers batch ids over old sink dirs; silently skipping would
-  *     DROP the new data, silently appending would double the old).
-  *   - no marker → delete any `batch-<tag>-<k>.*` data files (a crashed
-  *     attempt's partial commit — removing them FIRST also restores the
-  *     exact pre-batch state the recomputation must read), re-run the
-  *     append writing files NAMED `batch-<tag>-<k>`, then create the
-  *     marker LAST. Every crash point therefore replays to exactly one
-  *     committed copy.
-  *
-  * Markers and data files are matched by their whole name: a marker is
-  * `<tag>-<sig>` with the signature's fixed shape `-?\d+_\d+`, and a data
-  * file is `batch-<tag>-<k>.<ext>`, so one tag that is another plus `-…`
-  * (`crawl` and `crawl-2`) never reads or clears the other's state.
-  *
-  * On a first commit the signature is observed in the write's own pass
-  * ([[exactlyOnce]]), so a batch costs the one job that writes it; a
-  * committed replay costs the marker listing and one signature job.
-  *
-  * Data files are committed by per-file rename out of a dot-prefixed
-  * staging directory (invisible to readers), so a reader never sees a
-  * torn file; the marker directory is `_`-prefixed, so Spark's data
-  * listing never sees it. The batch's rows stay ordinary parquet files in
-  * the ordinary flat layout — estimate/compact paths need no changes, and
-  * compaction (staged-swap) folds batch files into plain rows while the
-  * markers SURVIVE in `_committed`, so a replay arriving after a
-  * compaction is still recognized as committed instead of re-appended.
-  *
-  * Single-writer per index, like every append/maintenance path in this
-  * repo: the marker check is check-then-act, serialized by foreachBatch.
+/** The marker mechanics of [[IndexLifecycle.append]]'s tagged branch,
+  * where the exactly-once protocol is stated: content signatures,
+  * `_committed/<tag>-<sig>` markers, clearing a crashed attempt's
+  * `batch-<tag>-<k>` files, and committing a batch's files by per-file
+  * rename. The batch's rows stay ordinary parquet files in the index's
+  * ordinary layout, so estimate, probe and compact paths read them
+  * unchanged.
   */
 object BatchAppend {
 
@@ -199,18 +163,11 @@ object BatchAppend {
   }
 
   /** Recreate `fromRoot`'s `_committed` markers under `stagedRoot` — for
-    * RETRAIN compactions that rebuild the whole index root via the staged
-    * swap ([[graft.pipeline.Sinks.overwriteViaStagingWith]]). The additive
-    * families keep data in a subdirectory (`sketches/`, `edges/`) so their
-    * compaction never touches the root's `_committed`; the vector-index
-    * families (IVF / PQ / OPQ / SemDeDup) keep data AT the root, and a
-    * retrain that dropped the markers would let a crash-replayed batch
-    * re-append rows the retrain already folded in — duplicate topk
-    * candidates, the exact failure the markers exist to prevent. Markers
-    * are empty files, identified by name alone, so "copy" is create-by-name.
+    * [[IndexLifecycle.rebuild]]. Markers are empty files, identified by
+    * name alone, so "copy" is create-by-name.
     */
-  def preserveMarkers(spark: SparkSession, fromRoot: String,
-                      stagedRoot: String): Unit = {
+  private[pipeline] def preserveMarkers(spark: SparkSession, fromRoot: String,
+                                        stagedRoot: String): Unit = {
     val src = markerDir(fromRoot)
     val fs = fsOf(spark, src)
     if (fs.exists(src)) {
@@ -223,24 +180,39 @@ object BatchAppend {
     }
   }
 
-  /** The batch being committed, as [[exactlyOnce]]'s `write` sees it:
-    * build the rows to append from `frame` and append them with [[append]].
+  /** The batch being committed, as a write sees it: build the rows to
+    * append from `frame` and append them with [[append]]. An untagged
+    * commit ([[IndexLifecycle.append]] with no tag) appends plain files.
     */
-  final class Commit private[BatchAppend] (val frame: DataFrame,
-      batch: DataFrame, obs: Observation, sigCols: Seq[Column],
-      tag: String, dataDirs: Seq[String]) {
-    private[BatchAppend] var observed = false
-    private[BatchAppend] var observable = true
+  class Commit private[pipeline] (val frame: DataFrame, dataDirs: Seq[String]) {
 
-    /** Append `rows` under `dir` ([[appendBatchFiles]]); `dir` must be one
-      * of the commit's data directories. The first append whose plan holds
-      * `frame`'s signature with no exchange or subquery between it and the
-      * write observes the signature in its own pass; an append that holds
-      * it otherwise leaves the signature to a job of its own.
-      */
+    /** Append `rows` under `dir`, one of the commit's data directories. */
     def append(rows: DataFrame, dir: String, partitionBy: Seq[String] = Nil): Unit = {
       require(dataDirs.contains(dir),
         s"BatchAppend: $dir is not among the data directories $dataDirs")
+      write(rows, dir, partitionBy)
+    }
+
+    protected def write(rows: DataFrame, dir: String, partitionBy: Seq[String]): Unit = {
+      val w = rows.write.mode(org.apache.spark.sql.SaveMode.Append)
+      (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(dir)
+    }
+  }
+
+  /** A tagged commit: rows land as `batch-<tag>-<k>` files
+    * ([[appendBatchFiles]]). The first append whose plan holds `frame`'s
+    * signature with no exchange or subquery between it and the write
+    * observes the signature in its own pass; an append that holds it
+    * otherwise leaves the signature to a job of its own.
+    */
+  private final class TaggedCommit(frame: DataFrame, batch: DataFrame,
+      obs: Observation, sigCols: Seq[Column], tag: String, dataDirs: Seq[String])
+      extends Commit(frame, dataDirs) {
+    var observed = false
+    var observable = true
+
+    override protected def write(rows: DataFrame, dir: String,
+                                 partitionBy: Seq[String]): Unit = {
       signaturePaths(rows) match {
         case Nil =>
         case Seq(true) if observable =>
@@ -284,24 +256,9 @@ object BatchAppend {
     }
   }
 
-  /** Append a batch to the index at `indexRoot` exactly once under `tag`.
-    *
-    * The batch's signature ([[contentSig]] of `batch` over `sigCols`,
-    * rows weighted by `weightCol` when given) decides:
-    *   - a marker for `tag` with the same signature → no-op (a replay);
-    *   - a marker with another signature → loud lineage error;
-    *   - no marker → clear the attempt's partials from `dataDirs`, run
-    *     `write`, which builds its rows from [[Commit.frame]] and appends
-    *     them with [[Commit.append]] into those dirs, and commit the marker.
-    *
-    * A present marker costs one signature job. A first commit observes the
-    * signature in the pass that writes the rows when they are a narrow map
-    * of `batch` (`Dataset.observe`, the same expressions as [[contentSig]]):
-    * the batch costs only its writes. Otherwise — rows grouped or joined
-    * above the batch, read from a cache, or built from another frame — the
-    * signature is computed by a job before the marker. `write` must not
-    * depend on the value of the signature. Returns whether the write ran
-    * (false = replay no-op).
+  /** Append a batch to the index at `indexRoot` exactly once under `tag`:
+    * the tagged branch of [[IndexLifecycle.append]], which states the
+    * protocol. Returns whether the write ran (false = replay no-op).
     */
   def exactlyOnce(indexRoot: String, tag: String, batch: DataFrame,
                   sigCols: Seq[String], dataDirs: Seq[String],
@@ -321,7 +278,7 @@ object BatchAppend {
         dataDirs.foreach(d => clearBatchFiles(spark, d, tag))
         val (s, n) = sigColumns(sigCols, weightCol)
         val obs = Observation()
-        val commit = new Commit(batch.observe(obs.name, s, n), batch, obs,
+        val commit = new TaggedCommit(batch.observe(obs.name, s, n), batch, obs,
           Seq(s, n), tag, dataDirs)
         write(commit)
         val sig = Some(obs).filter(_ => commit.observed && commit.observable)

@@ -152,30 +152,27 @@ object Sinks {
   def swapStagedRoot(spark: SparkSession, path: String)
                     (build: String => Unit): Unit = {
     val staging = s"${path}__staging"
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new Path(staging), true)
-    fs.mkdirs(new Path(staging))
+    drop(spark, staging)
     build(staging)
-    val target = new Path(path)
-    val old = new Path(s"${path}__old")
-    fs.delete(old, true)
-    if (fs.exists(target) && !fs.rename(target, old))
-      throw new java.io.IOException(
-        s"swapStagedRoot: could not move current root $target aside")
-    if (!fs.rename(new Path(staging), target)) {
-      if (fs.exists(old)) fs.rename(old, target): Unit
-      throw new java.io.IOException(
-        s"swapStagedRoot: could not move staged root into place at $target")
-    }
-    fs.delete(old, true): Unit
+    new Path(staging).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .mkdirs(new Path(staging))
+    swapIn(spark, path)
   }
 
-  /** Swap `path + "__staging"` into `path`. HDFS rename returns false
-    * instead of throwing (e.g. destination recreated concurrently) — check
-    * every step and keep the previous table at `__old` until the swap is
-    * verified, so a failed swap never destroys the only copy.
+  /** Swap `path + "__staging"` into `path`, returning the committed rows
+    * ([[countVerify]]).
     */
   private def commitStaged(spark: SparkSession, path: String): Long = {
+    swapIn(spark, path)
+    countVerify(spark, path)
+  }
+
+  /** Move `path + "__staging"` into `path`. HDFS rename returns false
+    * instead of throwing (e.g. destination recreated concurrently) — check
+    * every step and keep the previous table at `__old` until the swap has
+    * landed, so a failed swap never destroys the only copy.
+    */
+  private def swapIn(spark: SparkSession, path: String): Unit = {
     val target = new Path(path)
     val staging = new Path(path + "__staging")
     val old = new Path(path + "__old")
@@ -189,9 +186,7 @@ object Sinks {
       throw new java.io.IOException(
         s"staged overwrite: could not move staged data into place at $target")
     }
-    val n = countVerify(spark, path)
-    fs.delete(old, true)
-    n
+    fs.delete(old, true): Unit
   }
 
   /** JDBC analogue of [[overwriteViaStaging]]: a merge's plan READS the

@@ -13,17 +13,13 @@ import org.apache.spark.sql.functions._
   * parquet indexes):
   *
   *   - [[delete]] appends the doomed ids to `<root>/_tombstones/` —
-  *     O(batch), exactly-once under `batchTag` (the
-  *     [[BatchAppend]] marker protocol, tags namespaced `del-` so a
-  *     stream that appends AND deletes under the same batch id cannot
-  *     collide).
+  *     O(batch), exactly-once under `batchTag`, tags namespaced `del-`.
   *   - probes call [[exclude]] — one anti-join of the index rows
   *     against the tombstone set. Tombstones are usually tiny next to
   *     the corpus; AQE picks the broadcast side.
-  *   - [[purge]] physically removes tombstoned rows (staged swap —
-  *     readers see the old index or the new, never a half state),
-  *     copies every `_`-sidecar forward EXCEPT the tombstones
-  *     themselves, and preserves the exactly-once markers, so a
+  *   - [[purge]] physically removes tombstoned rows with a staged
+  *     rebuild that copies every `_`-sidecar forward EXCEPT the
+  *     tombstones themselves and carries the exactly-once markers, so a
   *     crash-replayed append OR delete arriving after the purge still
   *     no-ops. A re-append of a previously deleted id after a purge is
   *     a fresh row, as expected.
@@ -38,28 +34,23 @@ object Tombstones {
   def tombstonePath(indexRoot: String): String = s"$indexRoot/_tombstones"
 
   /** Append a batch of doomed ids (distinct-ed; the column is stored as
-    * `id` whatever its source name). `batchTag` = exactly-once: the ids
-    * are counted per id once, and the batch's signature is observed after
-    * that aggregate in the write's own pass (the sum over the groups of
-    * count × hash equals the per-row sum), so a first tagged delete is one
-    * write; the NULL group counts in the signature and is not written.
+    * `id` whatever its source name) through [[IndexLifecycle.append]]; a
+    * replay would re-append every id. Tags are namespaced `del-`, so a
+    * stream that appends AND deletes under one batch id cannot collide.
+    * The ids are counted per id once, and a tagged batch's signature is
+    * observed after that aggregate in the write's own pass (the sum over
+    * the groups of count × hash equals the per-row sum), so a first tagged
+    * delete is one write; the NULL group counts in the signature and is
+    * not written.
     */
   def delete(ids: DataFrame, idCol: String, indexRoot: String,
              batchTag: Option[String] = None): Unit = {
     val path = tombstonePath(indexRoot)
-    batchTag match {
-      case None =>
-        ids.select(col(idCol).as("id")).filter(col("id").isNotNull).distinct()
-          .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(path)
-      case Some(tag0) =>
-        val tag = s"del-$tag0"
-        val perId = ids.select(col(idCol).as("id")).groupBy("id")
-          .agg(count(lit(1)).as("n"))
-        BatchAppend.exactlyOnce(indexRoot, tag, perId, Seq("id"), Seq(path),
-          weightCol = Some("n")) { c =>
-          c.append(c.frame.filter(col("id").isNotNull).select("id"), path)
-        }: Unit
-    }
+    val perId = ids.select(col(idCol).as("id")).groupBy("id").agg(count(lit(1)).as("n"))
+    IndexLifecycle.append(indexRoot, batchTag.map(t => s"del-$t"), perId, Seq("id"),
+      Seq(path), weightCol = Some("n")) { c =>
+      c.append(c.frame.filter(col("id").isNotNull).select("id"), path)
+    }: Unit
   }
 
   /** The current tombstone set, or None when none have ever been
@@ -85,10 +76,9 @@ object Tombstones {
 
   /** Copy every `_`-prefixed sidecar directory from `fromRoot` into
     * `stagedRoot`, except `_tombstones` (the purge consumes them) and
-    * `_committed` (markers are recreated by
-    * [[BatchAppend.preserveMarkers]] — empty files, no data copy
-    * needed). Family-agnostic: `_meta`, `_centroids`, `_books`,
-    * `_rotation` all ride through untouched.
+    * `_committed` (the rebuild carries the markers). Family-agnostic:
+    * `_meta`, `_centroids`, `_books`, `_rotation` all ride through
+    * untouched.
     */
   def copySidecars(spark: SparkSession, fromRoot: String,
                    stagedRoot: String): Unit = {
@@ -105,13 +95,12 @@ object Tombstones {
     }
   }
 
-  /** Physically remove tombstoned rows: staged-swap rewrite of the data
-    * rows minus the tombstone set, sidecars and exactly-once markers
-    * carried forward, tombstones cleared by the swap itself (the new
-    * root simply has none). Returns the number of rows REMOVED — the
-    * footers' row counts before the swap minus the rows written, so no
-    * count job; no tombstones → no-op returning 0 (the index is
-    * untouched).
+  /** Physically remove tombstoned rows: an [[IndexLifecycle.rebuild]] of
+    * the data rows minus the tombstone set, sidecars carried forward,
+    * tombstones cleared by the swap itself (the new root simply has none).
+    * Returns the number of rows REMOVED — the footers' row counts before
+    * and after the swap, so no count job; no tombstones → no-op returning
+    * 0 (the index is untouched).
     *
     * `partitionCols` must name the index's partition layout (e.g.
     * `cell` for the IVF-shaped families) so the rewritten index keeps
@@ -125,11 +114,10 @@ object Tombstones {
       case Some(tombs) =>
         val kept = excludeIds(Sinks.readParquet(spark, indexRoot), tombs, idCol)
         val nBefore = Sinks.countVerify(spark, indexRoot)
-        val nKept = Sinks.overwriteViaStagingWith(kept, indexRoot,
-          partitionCols) { staged =>
+        IndexLifecycle.rebuild(spark, indexRoot) { staged =>
+          kept.write.partitionBy(partitionCols: _*).parquet(staged)
           copySidecars(spark, indexRoot, staged)
-          BatchAppend.preserveMarkers(spark, indexRoot, staged)
         }
-        nBefore - nKept
+        nBefore - Sinks.countVerify(spark, indexRoot)
     }
 }
