@@ -154,6 +154,9 @@ object Sinks {
     val staging = s"${path}__staging"
     drop(spark, staging)
     build(staging)
+    // created after `build`, so that it may write the root itself with
+    // the writer's default error-if-exists mode; a build that wrote
+    // nothing swaps in an empty root
     new Path(staging).getFileSystem(spark.sparkContext.hadoopConfiguration)
       .mkdirs(new Path(staging))
     swapIn(spark, path)
